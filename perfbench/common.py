@@ -99,28 +99,31 @@ def mean(values) -> float:
     return float(statistics.fmean(values)) if values else 0.0
 
 
+def peak_rss_mb(pid: int | str = "self") -> float:
+    """Peak resident memory (VmHWM) of a process, this one by default.
 
-def peak_rss_mb() -> float:
-    """Peak resident memory of this process (VmHWM). The Spark JVM is
-    not counted: its residency follows the collector's heap sizing, and
-    it varied from 3.6 to 5.0 GB between runs of the same code."""
-    with open("/proc/self/status") as f:
+    The end-to-end figure is this process's: the engine's Python side
+    and Spark's Python driver. The query-mix inputs and oracle answers
+    are made in a child process (``prepare``), so the benchmark's own
+    data generation is not in it. The Spark JVM is not counted there:
+    its residency follows the collector's heap sizing and varied from
+    3.6 to 5.0 GB between runs of the same code; the traced run reports
+    it as ``spark.jvm_peak_rss_mb``."""
+    with open(f"/proc/{pid}/status") as f:
         for line in f:
             if line.startswith("VmHWM:"):
                 return int(line.split()[1]) / 1024.0
-    raise RuntimeError("VmHWM missing from /proc/self/status")
+    raise RuntimeError(f"VmHWM missing from /proc/{pid}/status")
 
 
 def versions() -> dict:
-    import duckdb
-    import pyarrow
-    import pyspark
+    """Library versions, read from the installed package metadata so
+    that recording them imports nothing into the measured process."""
+    from importlib.metadata import version
 
     return {
         "python": sys.version.split()[0],
-        "pyspark": pyspark.__version__,
-        "pyarrow": pyarrow.__version__,
-        "duckdb": duckdb.__version__,
+        **{name: version(name) for name in ("pyspark", "pyarrow", "duckdb")},
     }
 
 

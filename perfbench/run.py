@@ -17,7 +17,10 @@ end-to-end metrics:
 - ``setup_s``: set-up time. ingest: the median of two builds of the
   grown table. query_mix: fixture generation, the lookup table's
   build, Spark session start and one warm-up pass.
-- ``peak_rss_mb``: peak resident memory of the benchmark process.
+- ``peak_rss_mb``: peak resident memory of the benchmark process (the
+  engine's Python side and Spark's Python driver; query-mix inputs and
+  oracle answers are made in a child process, and the Spark JVM is a
+  per-layer metric).
 - ``op_ms_p50``: median latency of the workload's operation. ingest:
   a moniker, from its scheduled send time until the tail reader first
   returns its files (freshness). query_mix: one pass over the whole
@@ -65,6 +68,8 @@ PER_LAYER = {
     "ingest.files_per_s": "1/s",
     "bookkeeper.commit_ms_p50": "ms",
     "bookkeeper.list_ms_p50": "ms",
+    "bookkeeper.read_ms_p50": "ms",
+    "bookkeeper.delete_ms_p50": "ms",
     "bookkeeper.self_ms_p50": "ms",
     "bookkeeper.batch_files_p50": "count",
     "bookkeeper.backlog_files_max": "count",
@@ -97,6 +102,7 @@ PER_LAYER = {
     "spark.tasks_per_op": "count",
     "spark.shuffle_bytes_per_op": "bytes",
     "spark.spill_bytes_per_op": "bytes",
+    "spark.jvm_peak_rss_mb": "MB",
     **{f"queries.{row}.ms_p50": "ms" for row in (
         "d1_tpch_q1", "c3_multiway_join", "e1_row_number_topk",
         "b2_boolean_predicates", "d3_count_distinct", "f2_topk",
@@ -116,6 +122,14 @@ class SparkHandle:
 
     def __init__(self) -> None:
         self.spark = None
+
+    def jvm_peak_rss_mb(self) -> float:
+        """Peak resident memory of the Spark JVM; 0 when none started."""
+        if self.spark is None:
+            return 0.0
+        from pyspark import SparkContext
+
+        return common.peak_rss_mb(SparkContext._gateway.proc.pid)
 
     def __call__(self):
         if self.spark is None:
@@ -195,6 +209,8 @@ def main(argv=None) -> int:
             tracer = Tracer()
             install_engine_wrappers(tracer)
         res, layers = _run_workload(args, work, tracer, spark)
+        if args.trace:
+            layers["spark.jvm_peak_rss_mb"] = spark.jvm_peak_rss_mb()
         spark.stop()
         if args.trace:
             metrics = {name: {"value": float(layers.get(name, 0.0)), "unit": unit}

@@ -1,6 +1,6 @@
 """Run-to-run spread of the end-to-end metrics.
 
-    python3 perfbench/spread.py --workload scan --seeds 1 2 3 4 5
+    python3 perfbench/spread.py --workload ingest --seeds 1 2 3 4 5
 
 Runs the benchmark once per seed (untraced), then prints for every
 end-to-end metric its median and the distance between the first and

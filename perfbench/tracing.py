@@ -133,6 +133,28 @@ class Tracer:
                 )
 
 
+class TracedPool:
+    """Stands in for a thread pool whose ``map`` calls are each one step
+    of the caller: every ``map`` becomes one span on the calling thread,
+    named by the mapped function (``names``), covering the whole batch.
+    The bookkeeper reads and deletes its monikers this way."""
+
+    def __init__(self, tracer: Tracer, pool, names: dict[str, str]) -> None:
+        self._tracer, self._pool, self._names = tracer, pool, names
+
+    def map(self, fn, *iterables):
+        token = self._tracer.begin(self._names.get(getattr(fn, "__name__", ""), "pool.map"))
+        results = []
+        try:
+            results = list(self._pool.map(fn, *iterables))
+            return iter(results)
+        finally:
+            self._tracer.end(token, items=len(results))
+
+    def __getattr__(self, attr):
+        return getattr(self._pool, attr)
+
+
 def descendants(span: Span, kids: dict[int, list[Span]]) -> list[Span]:
     out, todo = [], list(kids.get(span.sid, []))
     while todo:
@@ -156,6 +178,7 @@ def install_engine_wrappers(tracer: Tracer) -> None:
     from java_iceberg_table_spark.ingest.writer import Writer
     from java_iceberg_table_spark.table import format as fmt
     from java_iceberg_table_spark.table.table import Table
+    from pyspark.sql.classic.dataframe import DataFrame
 
     tracer.wrap(Writer, "create_data_files", "writer.create_data_files",
                 lambda a, r: {"files": a[1]})
@@ -169,6 +192,10 @@ def install_engine_wrappers(tracer: Tracer) -> None:
         tracer.wrap(Table, attr, f"table.{attr}")
     tracer.wrap(Table, "plan_files", "table.plan_files",
                 lambda a, r: {"survivors": len(r or ())})
+    # the rest of Table.scan: the Spark read of the planned files and
+    # the filters it re-applies as residuals
+    tracer.wrap(Table, "_read_with_deletes", "table.read_files")
+    tracer.wrap(DataFrame, "filter", "spark.filter")
     # the distributed planner reads manifests through Spark, not
     # read_manifest: count the manifests it hands to the JSON scan
     tracer.wrap(Table, "_manifest_entries_df", "table.manifest_entries_df",

@@ -4,28 +4,32 @@ Why this workload: writers stream files, one bookkeeper serializes the
 commits, a reaper expires snapshots and a reader tails the table. At
 about 10^4 files the bookkeeper's commit is dominated by manifest
 reads (the dedupe pass) and the periodic full manifest merge, and the
-reaper's expiry competes with it for the CPU and the version CAS;
-Spark is idle. Larger tables do not give a steady run: at 2x10^4 files
-on 4 cores the roles fall behind the offered rate (about 15 files/s
-committed), the backlog grows through the run and freshness varies
-by 15% from run to run; at 4x10^4 files every commit takes seconds.
+reaper competes with it for the CPU and the version CAS; Spark is
+idle. Larger tables do not give a steady run: at 2x10^4 files on 4
+cores the roles fall behind the offered rate (about 15 files/s
+committed), the backlog grows through the run and freshness varies by
+15% from run to run; at 4x10^4 files every commit takes seconds.
 
-Set-up grows the table (``grown.grow``) to the full size, more than
-once, and reports the median. The load: five logical writers (the
+Set-up grows two tables (``grown.grow``) to the full size and reports
+the median build time. The load: five logical writers (the
 reference's ``run.sh`` fan-out) publish monikers of two files each on
 a fixed schedule at 20 files/s. One generator thread drives the
 writers, one thread loops ``Bookkeeper.run_once``, one tail reader
-polls ``Table.incremental_entries`` and one ``Reaper`` runs every
-5 s of the schedule (at 2.5 s and 7.5 s of a 10-second run). The reaper keeps the reference's policy (expire by age, keep the
-last N) on a clock scaled to a 10-second run: it expires snapshots
-older than 2 s beyond the last 5, where the reference uses 10 min and
-20, so that it has snapshots to expire within the run.
+polls ``Table.incremental_entries`` and one ``Reaper`` runs every 5 s
+of the schedule (at 2.5 s and 7.5 s of a 10-second run). The reaper
+keeps the reference's policy (expire by age, keep the last N) with
+snapshots older than 10 s beyond the last 20. Full-size runs expire
+nothing with it (``reaper.snapshots_expired`` and
+``reaper.files_deleted`` are 0), so there the reaper's cost is its
+metadata read and policy pass; only the tiny self-test size (300 ms,
+last 3) expires snapshots.
 Freshness is timed from a moniker's scheduled send time, so a stall
 also delays every later moniker.
 
-A traced run loads two of the set-up tables for ``--seconds`` each,
+A traced run loads each of the two set-up tables for ``--seconds``,
 untraced and then traced, and reports the freshness gap as the tracing
-overhead; the per-layer numbers come from the traced phase.
+overhead; the per-layer numbers come from the traced phase. An
+untraced run loads the first table only.
 """
 
 from __future__ import annotations
@@ -39,9 +43,10 @@ from dataclasses import dataclass, field
 
 from . import grown
 from .common import mean, median, overhead_pct, pct
-from .tracing import Tracer, descendants, self_ms
+from .tracing import TracedPool, Tracer, descendants, self_ms
 
 HOUR_LAST = 23  # the load writes into the newest hourly partition
+SETUP_TABLES = 2  # set-up time is their median; a traced run loads both
 
 
 @dataclass
@@ -50,7 +55,6 @@ class IngestSize:
     templates: int = 20
     links: int = 21  # 24 x 20 x 21 = 10,080 files
     commits: int = 4
-    setup_reps: int = 2
     writers: int = 5
     files_per_moniker: int = 2
     files_per_s: float = 20.0
@@ -61,7 +65,7 @@ class IngestSize:
     stall_timeout_s: float = 30.0
 
 
-TINY = IngestSize(hours=4, templates=2, links=3, commits=2, setup_reps=2,
+TINY = IngestSize(hours=4, templates=2, links=3, commits=2,
                   reaper_every_s=0.5, reaper_max_age_ms=300, retain_last=3,
                   drain_timeout_s=5.0, stall_timeout_s=10.0)
 
@@ -92,7 +96,7 @@ class Phase:
 
 def _setup(work: str, seed: int, size: IngestSize) -> tuple[list, list[float]]:
     tables, times = [], []
-    for rep in range(size.setup_reps):
+    for rep in range(SETUP_TABLES):
         root = os.path.join(work, f"ingest-{rep}", "t")
         t0 = time.perf_counter()
         tables.append(grown.grow(root, seed, size.hours, size.templates, size.links, size.commits))
@@ -100,7 +104,8 @@ def _setup(work: str, seed: int, size: IngestSize) -> tuple[list, list[float]]:
     return tables, times
 
 
-def _load(tbl, seed: int, seconds: float, size: IngestSize, inject: str | None) -> Phase:
+def _load(tbl, seed: int, seconds: float, size: IngestSize, inject: str | None,
+          tracer: Tracer | None) -> Phase:
     """Run the four roles against ``tbl`` for ``seconds`` of schedule,
     then drain. The first fatal reason any role hits ends the phase."""
     from java_iceberg_table_spark.ingest.bookkeeper import Bookkeeper
@@ -109,6 +114,9 @@ def _load(tbl, seed: int, seconds: float, size: IngestSize, inject: str | None) 
 
     writers = [Writer(tbl, writer_id=i, seed=seed * 1_000_003 + i) for i in range(size.writers)]
     bk = Bookkeeper(tbl)
+    if tracer is not None:  # moniker reads and deletes become spans
+        bk.pool = TracedPool(tracer, bk.pool, {"_read_moniker": "bookkeeper.read_monikers",
+                                               "remove": "bookkeeper.delete_monikers"})
     reaper = Reaper(tbl, max_age_ms=size.reaper_max_age_ms, retain_last=size.retain_last)
     start_cursor = tbl.metadata.current_snapshot_id
     period = size.files_per_moniker / size.files_per_s
@@ -230,7 +238,7 @@ def run(work: str, seed: int, seconds: float, tracer: Tracer | None,
     for g, traced in zip(tables, modes):
         if tracer is not None:
             tracer.recording = traced
-        phases.append(_load(g.table, seed + len(phases), seconds, size, inject))
+        phases.append(_load(g.table, seed + len(phases), seconds, size, inject, tracer))
         if tracer is not None:
             tracer.recording = False
     tbl = tables[len(modes) - 1].table
@@ -287,10 +295,11 @@ def layer_metrics(res: dict, tracer: Tracer) -> dict:
             counts.append(sum(1 for d in desc if d.name == name))
         written += sum(d.attrs.get("entries", 0) for d in desc if d.name == "format.write_manifest")
         added += sum(d.attrs.get("added", 0) for d in desc if d.name == "table.append_entries")
-        # list_pending, append_entries and the bookkeeper's own time
-        # must account for the commit as the benchmark timed it
+        # list_pending, the moniker reads, append_entries and the
+        # moniker deletes, each timed on its own, must account for the
+        # commit as the benchmark timed it around run_once
         outer = next((c["ms"] for c in traced.commits if abs(c["end"] - r.end) < 0.05), r.ms)
-        parts = sum(c.ms for c in kids.get(r.sid, [])) + self_ms(r, kids)
+        parts = sum(c.ms for c in kids.get(r.sid, []))
         unaccounted += int(abs(outer - parts) > 0.10 * outer)
     creates = tracer.named("writer.create_data_files")
     monikers = traced.monikers
@@ -304,6 +313,8 @@ def layer_metrics(res: dict, tracer: Tracer) -> dict:
         "ingest.files_per_s": res["files_per_s"],
         "bookkeeper.commit_ms_p50": median([c["ms"] for c in untraced.commits]),
         "bookkeeper.list_ms_p50": median([s.ms for s in tracer.named("bookkeeper.list_pending")]),
+        "bookkeeper.read_ms_p50": median([s.ms for s in tracer.named("bookkeeper.read_monikers")]),
+        "bookkeeper.delete_ms_p50": median([s.ms for s in tracer.named("bookkeeper.delete_monikers")]),
         "bookkeeper.self_ms_p50": median([self_ms(r, kids) for r in runs]),
         "bookkeeper.batch_files_p50": median([c["files"] for c in traced.commits]),
         "bookkeeper.backlog_files_max": max([c["files"] for c in traced.commits], default=0),

@@ -19,16 +19,24 @@ changes a setting, so a gain from another setting has to land in
 ``session.py``, where users get it. Every operation returns at most a
 few thousand rows, so each materializes with ``collect()``. Each query
 row is checked, untimed, against its DuckDB oracle with
-``oracle.compare``; each lookup against the rows set-up wrote.
+``oracle.compare``; each lookup against the rows set-up wrote. The
+fixtures and the oracle answers are made in a child process
+(``prepare``), so the measured process's peak memory is the engine's
+and Spark's driver side, not the generator's or DuckDB's.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import random
+import subprocess
+import sys
 import time
 
-from . import fixturegen, lookups
+import pandas as pd
+
+from . import lookups
 from .common import median
 from .sparkprobe import Probe, spark_layer, unaccounted
 from .tracing import Tracer
@@ -53,7 +61,6 @@ ROWS = [
 def to_pandas(rows, schema):
     """Collected rows to pandas exactly as ``DataFrame.toPandas`` does
     without Arrow, so the oracle comparison needs no second execution."""
-    import pandas as pd
     from pyspark.sql.pandas.types import _create_converter_to_pandas
 
     cols = [f.name for f in schema.fields]
@@ -72,15 +79,15 @@ def to_pandas(rows, schema):
     )
 
 
-def _oracles(sf_dir: str, registry, rows: list[str]) -> dict:
-    from java_iceberg_table_spark.oracle import duck_connect
-
-    con = duck_connect(sf_dir)
-    con.execute("SET enable_progress_bar = false")
-    try:
-        return {name: con.execute(registry[name].oracle).df() for name in rows}
-    finally:
-        con.close()
+def _prepare(work: str, seed: int, rows: list[str]) -> tuple[str, dict, float]:
+    """Fixtures and oracle answers from a child process: (fixture
+    directory, oracle frame per row, fixture generation seconds)."""
+    subprocess.run([sys.executable, "-m", "perfbench.prepare", work, str(seed), *rows],
+                   check=True, timeout=600)
+    with open(os.path.join(work, "prepared.json")) as f:
+        fixtures_s = json.load(f)["fixtures_s"]
+    oracles = {name: pd.read_pickle(os.path.join(work, "oracles", f"{name}.pkl")) for name in rows}
+    return os.path.join(work, "sf0.1"), oracles, fixtures_s
 
 
 def run(work: str, seed: int, seconds: float, tracer: Tracer | None, spark_factory,
@@ -90,10 +97,8 @@ def run(work: str, seed: int, seconds: float, tracer: Tracer | None, spark_facto
     from java_iceberg_table_spark.queries import load_all
     from java_iceberg_table_spark.sources.engine_datasource import register_engine_datasource
 
+    sf_dir, oracles, fixtures_s = _prepare(work, seed, rows)
     registry = load_all()
-    t0 = time.perf_counter()
-    sf_dir = fixturegen.generate(os.path.join(work, "sf0.1"), seed)
-    fixtures_s = time.perf_counter() - t0
     lk = lookups.Lookups(work, seed, lookup_size)
     t0 = time.perf_counter()
     spark = spark_factory()
@@ -109,8 +114,7 @@ def run(work: str, seed: int, seconds: float, tracer: Tracer | None, spark_facto
     block = lk.next_block()
     for name in ops:  # warm-up pass: JIT, Python workers, per-session caches
         probe.run(builder(name, block), False)
-    setup_s = fixtures_s + median(lk.setup_times) + time.perf_counter() - t0
-    oracles = _oracles(sf_dir, registry, rows)
+    setup_s = fixtures_s + lk.setup_s + time.perf_counter() - t0
 
     # Whole passes, until the window has passed, so every run times each
     # operation equally often (one pass takes about 12 s on 4 cores). A
@@ -188,5 +192,6 @@ def layer_metrics(res: dict, tracer: Tracer) -> dict:
         **by_row,
         **lookups.layer_metrics(execs, res["end_state"], tracer),
         "trace.overhead_pct": median([(t / u - 1.0) * 100.0 for t, u in pairs]),
-        "trace.unaccounted_ops": sum(unaccounted(x["op"]) for x in traced),
+        "trace.unaccounted_ops": (sum(unaccounted(x["op"]) for x in traced)
+                                  + lookups.unaccounted_scans(tracer)),
     }
