@@ -265,10 +265,11 @@ def arrow_stats(records, file_bytes: int) -> dict:
     """{rows, bytes, columns:{name:{min,max,nulls}}} computed from the
     in-memory Arrow batch — the write-time-metrics path for formats
     without a parquet footer (Writer.java:107 semantics). Values use
-    the same JSON-safe representation as table/stats.file_stats."""
+    the same JSON-safe representation and string/binary truncation as
+    table/stats.file_stats (``stats.bounds``)."""
     import pyarrow.compute as pc
 
-    from ..table.stats import _plain
+    from ..table.stats import bounds
 
     import pyarrow as pa
 
@@ -291,7 +292,7 @@ def arrow_stats(records, file_bytes: int) -> dict:
             mm = pc.min_max(col)
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
             if not (mn != mn or mx != mx):
-                entry["min"], entry["max"] = _plain(mn), _plain(mx)
+                entry["min"], entry["max"] = bounds(mn, mx)
         except Exception:
             pass  # stats are optional; pruning treats missing as "keep"
         cols[name] = entry

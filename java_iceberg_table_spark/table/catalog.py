@@ -106,23 +106,10 @@ def _cat_current_version(root: str) -> int:
 
 
 def _cat_try_commit(root: str, state: CatalogState) -> None:
-    """Same link-CAS publish as table metadata (format.py
-    try_commit_version): the version file appears atomically with its
-    full content or not at all; losing the race raises."""
-    path = _cat_version_path(root, state.version)
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(state.to_json(), f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, path)
-    except FileExistsError as e:
-        raise fmt.CommitConflict(
-            f"catalog version {state.version} already committed"
-        ) from e
-    finally:
-        os.unlink(tmp)
+    """Same link-CAS publish as table metadata (format.publish_json):
+    the version file appears atomically with its full content or not
+    at all; losing the race raises."""
+    fmt.publish_json(_cat_version_path(root, state.version), state.to_json())
     hint = os.path.join(_cat_dir(root), "version-hint.text")
     htmp = f"{hint}.{uuid.uuid4().hex}.tmp"
     with open(htmp, "w") as f:

@@ -37,6 +37,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import format as fmt
+
 DEFAULT_K = 256
 _TWO63 = 1 << 63
 _TWO64 = 1.0 * (1 << 64)
@@ -99,11 +101,10 @@ def write_stats_file(
     """Persist the sketch set under metadata/ (the Puffin analogue);
     returns the root-relative path the table property points at."""
     rel = os.path.join("metadata", f"stats-{snapshot_id}-{uuid.uuid4().hex}.json")
-    path = os.path.join(root, rel)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"snapshot_id": snapshot_id, "k": k, "columns": sketches}, f)
-    os.replace(tmp, path)
+    fmt.write_json_atomic(
+        os.path.join(root, rel),
+        {"snapshot_id": snapshot_id, "k": k, "columns": sketches},
+    )
     return rel
 
 

@@ -2,7 +2,8 @@
 expire_snapshots — PySpark-driven, metadata in JSON (format.py).
 
 Scale design:
-- scan planning is metadata-only (manifests are small JSON); Spark
+- scan planning is metadata-only (manifests are small JSON: string
+  and binary bounds are truncated to 16 chars, stats.py); Spark
   receives an explicit pruned file list, so partition pruning and
   min/max file skipping happen BEFORE any executor starts — the
   equivalent of Iceberg's manifest filtering.
@@ -10,6 +11,9 @@ Scale design:
   rewritten (fast append, Writer.java:139-154). Manifest compaction
   merges small manifests past a threshold
   (commit.manifest.min-count-to-merge, Writer.java:120).
+- the bookkeeper's dedupe-by-path commit reads only the manifests its
+  Table instance has not seen: each live manifest's path set is
+  cached, and a commit seeds the cache with what it wrote.
 - delete_where with a partition-aligned predicate drops whole files
   from metadata — zero data IO at any table size
   (FileBasedBookkeeper.java:182-192).
@@ -31,7 +35,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from . import format as fmt
 from .format import Snapshot, TableMetadata
-from .stats import file_stats
+from .stats import _prefix_upper, file_stats
 from .transforms import CompositeTransform, Transform, transform_from_json
 
 DEFAULT_PROPERTIES = {
@@ -77,24 +81,15 @@ def _dnf_branches(filters) -> list[list[tuple]]:
     return [list(filters)]
 
 
-def _prefix_upper(pfx: str) -> str | None:
-    """Smallest string greater than every string with prefix ``pfx``
-    (bump the last bumpable code point); None when no such bound
-    exists. Python str comparison is by code point, which matches
-    parquet's UTF-8 byte ordering on the stats bounds."""
-    for i in range(len(pfx) - 1, -1, -1):
-        c = ord(pfx[i])
-        if c < 0x10FFFF:
-            return pfx[:i] + chr(c + 1)
-    return None
-
-
 # Above this much manifest JSON, scan planning / GC reachability moves
 # from the driver-side Python loop to a distributed Spark scan of the
-# manifests (inspect.py's machinery). ~4 MB is ~10^4 entries — below
-# it, session+job overhead exceeds the loop; above it, the driver loop
-# becomes the engine's first scale bottleneck (a 100x file-count table
-# plans as a parallel JSON scan instead of a million-iteration loop).
+# manifests (inspect.py's machinery). An entry is a few hundred bytes
+# whatever the column widths (string and binary bounds are truncated
+# to 16 chars, stats.py; a 5-column events entry is ~0.6 KB), so ~4 MB
+# is ~10^4 entries — below it, session+job overhead exceeds the loop;
+# above it, the driver loop becomes the engine's first scale
+# bottleneck (a 100x file-count table plans as a parallel JSON scan
+# instead of a million-iteration loop).
 DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
 
 # Position deletes at or below this many rows are stored as INLINE
@@ -490,6 +485,15 @@ def _parse_stat(s: str | None):
 class Table:
     def __init__(self, root: str):
         self.root = root
+        # {manifest path: frozenset of its entry paths} for
+        # append_entries(dedupe_paths=True): exactly the manifests of
+        # the last parent snapshot it deduped against, plus the ones
+        # its commit wrote. Manifests are immutable and uuid-named, so
+        # an entry never goes stale; the bound is the live table. Both
+        # writers replace the dict whole, so threads committing through
+        # one Table can only lose entries (re-read later), never see a
+        # wrong one.
+        self._path_sets: dict[str, frozenset] = {}
 
     # ---------- metadata plane ----------
 
@@ -942,13 +946,16 @@ class Table:
             if t is not None:
                 # composite specs derive one bucket PER FIELD from the
                 # same footer stats — the file must lie in exactly one
-                # bucket on EVERY field
+                # bucket on EVERY field. The stats are the UNTRUNCATED
+                # footer values: a long string's truncated bounds never
+                # satisfy min == max.
+                exact = file_stats(src, exact=True)["columns"]
                 fields = (
                     t.fields if isinstance(t, CompositeTransform) else (t,)
                 )
                 vals = []
                 for ft in fields:
-                    cst = st["columns"].get(ft.source_column)
+                    cst = exact.get(ft.source_column)
                     if not cst or cst.get("min") is None or cst.get("nulls", 0) > 0:
                         raise ValueError(
                             f"{src}: cannot derive a partition value — no "
@@ -1067,10 +1074,15 @@ class Table:
         referenced by the parent snapshot — the bookkeeper's crash
         idempotence: replaying a batch whose commit was durable but
         whose moniker deletion crashed re-appends nothing. Returns
-        None when every entry was a duplicate (no commit made)."""
+        None when every entry was a duplicate (no commit made). The
+        parent's path sets come from ``_path_sets``, so only manifests
+        this instance did not write or read before are read: a steady
+        single committer reads none."""
 
         result: list[Snapshot] = []
         stale_manifests: list[str] = []
+        # path sets of the manifests the current attempt wrote
+        written: dict[str, frozenset] = {}
 
         def build(current: TableMetadata) -> TableMetadata | None:
             # Manifests written by a LOST CAS attempt are referenced by
@@ -1082,6 +1094,7 @@ class Table:
                 except OSError:
                     pass
             stale_manifests.clear()
+            written.clear()
             if branch is not None:
                 ref = current.refs.get(branch)
                 if ref is None:
@@ -1095,12 +1108,11 @@ class Table:
                 parent = current.current_snapshot()
             use = entries
             if dedupe_paths and parent is not None:
-                existing = {
-                    e["path"]
-                    for m in parent.manifests
-                    for e in fmt.read_manifest(self.root, m)
-                }
-                use = [e for e in entries if e["path"] not in existing]
+                live = self._live_path_sets(parent.manifests)
+                use = [
+                    e for e in entries
+                    if not any(e["path"] in ps for ps in live)
+                ]
                 if not use:
                     result.clear()
                     return None
@@ -1125,6 +1137,8 @@ class Table:
             use = stamped
             manifest_rel = fmt.write_manifest(self.root, use)
             stale_manifests.append(manifest_rel)
+            if dedupe_paths:
+                written[manifest_rel] = frozenset(e["path"] for e in use)
             manifests = (list(parent.manifests) if parent else []) + [manifest_rel]
             merge_min = int(
                 current.properties.get("commit.manifest.min-count-to-merge", "8")
@@ -1142,10 +1156,12 @@ class Table:
                 for m in manifests:
                     merged.extend(fmt.read_manifest(self.root, m))
                 merged.sort(key=lambda e: (e.get("partition") is None, e.get("partition"), e["path"]))
-                manifests = [
-                    fmt.write_manifest(self.root, merged[i : i + max_entries])
-                    for i in range(0, len(merged), max_entries)
-                ]
+                manifests = []
+                for i in range(0, len(merged), max_entries):
+                    shard = merged[i : i + max_entries]
+                    manifests.append(fmt.write_manifest(self.root, shard))
+                    if dedupe_paths:
+                        written[manifests[-1]] = frozenset(e["path"] for e in shard)
                 stale_manifests.extend(manifests)
             snap = Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
@@ -1193,7 +1209,27 @@ class Table:
 
         retries = int(self.metadata.properties.get("commit.retry.num-retries", "1000"))
         fmt.commit(self.root, build, max_retries=retries)
+        if dedupe_paths and result:
+            # the CAS won: the next dedupe's parent is this snapshot,
+            # whose manifests were all carried over or written here
+            known = {**self._path_sets, **written}
+            self._path_sets = {
+                m: known[m] for m in result[0].manifests if m in known
+            }
         return result[0] if result else None
+
+    def _live_path_sets(self, manifests: list[str]) -> list[frozenset]:
+        """Entry-path sets of ``manifests`` (a parent snapshot's), read
+        only for manifests missing from ``_path_sets``, which then
+        holds exactly these manifests."""
+        cache = self._path_sets
+        live = {}
+        for m in manifests:
+            live[m] = cache[m] if m in cache else frozenset(
+                e["path"] for e in fmt.read_manifest(self.root, m)
+            )
+        self._path_sets = live
+        return list(live.values())
 
     def rollback_to(self, snapshot_id: int) -> None:
         """Metadata-only restore: move the table head back to an

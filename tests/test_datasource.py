@@ -292,7 +292,9 @@ def test_in_list_pushdown_prunes_partitions(ds, base_dir):
     tbl = create_table(
         root, src.schema, properties={"write.sort.order": "ts"}
     )
-    tbl.append(src)
+    # an explicit count of sorted files: a plain append writes one per
+    # core, and at 4 files every file holds a probed value
+    tbl.append_entries(tbl._write_data_files(src, n_tasks=8))
     n_files = len(tbl.current_files())
     assert n_files > 1
     from java_iceberg_table_spark.sources.engine_datasource import (

@@ -113,6 +113,113 @@ def test_bookkeeper_replay_does_not_double_append(spark, troot):
     assert os.listdir(pending) == []  # replayed monikers still consumed
 
 
+def _count_manifest_reads(monkeypatch) -> list[str]:
+    reads: list[str] = []
+    real = fmt.read_manifest
+
+    def counting(root, rel):
+        reads.append(rel)
+        return real(root, rel)
+
+    monkeypatch.setattr(fmt, "read_manifest", counting)
+    return reads
+
+
+def test_bookkeeper_replay_after_merge_reads_no_manifest(troot, monkeypatch):
+    """The dedupe path sets of a merge commit's shards are cached when
+    its CAS wins: replaying the merged batch (monikers resurfacing
+    after the commit) appends nothing and reads no manifest."""
+    tbl = create_table(
+        troot,
+        SIMPLE_SCHEMA,
+        partition=truncate("ts", 100),
+        properties={"commit.manifest.min-count-to-merge": "2"},
+    )
+    w = Writer(tbl, writer_id=0, seed=7)
+    bk = Bookkeeper(tbl)
+    pending = os.path.join(troot, "_pending")
+    for _ in range(2):
+        w.run_iteration(n_files=2, rows_per_file=10, timeperiod_us=0)
+        assert bk.run_once()["files"] == 2
+    w.run_iteration(n_files=2, rows_per_file=10, timeperiod_us=0)
+    monikers = {
+        p: open(os.path.join(pending, p)).read() for p in os.listdir(pending)
+    }
+    assert bk.run_once()["files"] == 2
+    snap = tbl.metadata.current_snapshot()
+    # the third commit merged: its own manifest is folded into a shard
+    assert snap.summary["added-manifest"] not in snap.manifests
+    assert set(tbl._path_sets) == set(snap.manifests)
+    reads = _count_manifest_reads(monkeypatch)
+    for name, content in monikers.items():
+        with open(os.path.join(pending, name), "w") as f:
+            f.write(content)
+    m = bk.run_once()
+    assert (m["files"], m["monikers"]) == (0, 1)
+    assert reads == []
+    assert tbl.metadata.current_snapshot().snapshot_id == snap.snapshot_id
+    assert os.listdir(pending) == []
+    assert len(tbl.current_files()) == 6
+
+
+def test_dedupe_reads_manifests_another_instance_wrote(troot, monkeypatch):
+    """A commit by a second Table instance in between is a cache miss:
+    its manifest is read, so its files still dedupe."""
+    tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 100))
+    other = load_table(troot)
+    w = Writer(tbl, writer_id=0, seed=7)
+    a, b, c = (w.create_data_files(2, 10, 0) for _ in range(3))
+    tbl.append_entries(a, dedupe_paths=True)
+    other.append_entries(b, dedupe_paths=True)
+    b_manifest = other.metadata.current_snapshot().summary["added-manifest"]
+    reads = _count_manifest_reads(monkeypatch)
+    assert tbl.append_entries(b, dedupe_paths=True) is None
+    assert reads == [b_manifest]
+    snap = tbl.append_entries(b + c, dedupe_paths=True)
+    assert snap.summary["added-files"] == 2
+    assert reads == [b_manifest]
+    assert sorted(e["path"] for e in tbl.current_files()) == sorted(
+        e["path"] for e in a + b + c
+    )
+
+
+def test_dedupe_cache_shared_by_concurrent_committers(troot):
+    """Threads committing overlapping batches through ONE Table share
+    its path-set cache: every path still lands exactly once."""
+    import random
+    import sys
+    import threading
+
+    tbl = create_table(
+        troot, SIMPLE_SCHEMA, properties={"commit.manifest.min-count-to-merge": "3"}
+    )
+    paths = [f"data/f{i}.parquet" for i in range(60)]
+
+    def commit(seed: int) -> None:
+        rng = random.Random(seed)
+        for _ in range(6):
+            batch = rng.sample(paths, 8)
+            tbl.append_entries(
+                [{"path": p, "rows": 1, "bytes": 1, "partition": None, "columns": {}}
+                 for p in batch],
+                dedupe_paths=True,
+            )
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=commit, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    got = [e["path"] for e in tbl.current_files()]
+    assert len(got) == len(set(got))
+
+
 def test_added_files_survives_parent_expiry(spark, troot):
     """added-manifest tracking: incremental reads keep working after
     the parent snapshot is expired (previously KeyError)."""

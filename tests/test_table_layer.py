@@ -555,7 +555,9 @@ def test_runtime_filtered_scan_set_pruning(spark, troot):
     tbl = create_table(
         troot, SIMPLE_SCHEMA, properties={"write.sort.order": "ts"}
     )
-    tbl.append(shuffled)
+    # an explicit count of sorted files: a plain append writes one per
+    # core, and at 4 files every file holds a key
+    tbl.append_entries(tbl._write_data_files(shuffled, n_tasks=8))
     n_files = len(tbl.current_files())
     assert n_files > 1
     # sparse keys: multiples of 1777 (6 keys over [0, 10k)); sorted
