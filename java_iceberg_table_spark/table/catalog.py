@@ -39,8 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,40 +79,24 @@ def _cat_dir(root: str) -> str:
 
 
 def _cat_version_path(root: str, version: int) -> str:
-    return os.path.join(_cat_dir(root), f"v{version}.json")
+    return fmt.log_path(_cat_dir(root), version)
 
 
-def _cat_current_version(root: str) -> int:
+def _cat_state(root: str) -> CatalogState:
+    v = fmt.log_version(_cat_dir(root))
+    return CatalogState.from_json(fmt.read_json(_cat_version_path(root, v)))
+
+
+def _cat_commit(root: str, build) -> CatalogState:
+    """One catalog commit: the table metadata's link-CAS publish and
+    optimistic-retry loop (format.retry_commit) over the catalog's
+    version log. ``build(current)`` returns the next state."""
     cdir = _cat_dir(root)
-    hint = os.path.join(cdir, "version-hint.text")
-    v = 0
-    try:
-        with open(hint) as f:
-            v = int(f.read().strip())
-    except (OSError, ValueError):
-        versions = [
-            int(p[1:-5])
-            for p in os.listdir(cdir)
-            if p.startswith("v") and p.endswith(".json")
-        ]
-        if not versions:
-            raise FileNotFoundError(f"no catalog under {cdir}")
-        return max(versions)
-    while os.path.exists(_cat_version_path(root, v + 1)):
-        v += 1
-    return v
-
-
-def _cat_try_commit(root: str, state: CatalogState) -> None:
-    """Same link-CAS publish as table metadata (format.publish_json):
-    the version file appears atomically with its full content or not
-    at all; losing the race raises."""
-    fmt.publish_json(_cat_version_path(root, state.version), state.to_json())
-    hint = os.path.join(_cat_dir(root), "version-hint.text")
-    htmp = f"{hint}.{uuid.uuid4().hex}.tmp"
-    with open(htmp, "w") as f:
-        f.write(str(state.version))
-    os.rename(htmp, hint)
+    return fmt.retry_commit(
+        lambda: _cat_state(root),
+        build,
+        lambda st: fmt.log_publish(cdir, st.version, st.to_json()),
+    )
 
 
 def _from_join_identifiers(statement: str) -> set[str]:
@@ -347,7 +329,8 @@ class Catalog:
     @staticmethod
     def create(root: str) -> "Catalog":
         os.makedirs(_cat_dir(root), exist_ok=True)
-        _cat_try_commit(root, CatalogState(version=1, pins={}))
+        st = CatalogState(version=1, pins={})
+        fmt.log_publish(_cat_dir(root), st.version, st.to_json())
         return Catalog(root)
 
     def _table_root(self, name: str) -> str:
@@ -375,23 +358,14 @@ class Catalog:
         table directory is deleted too; without it the data stays on
         disk for re-registration or external cleanup (Iceberg's
         DROP TABLE vs DROP TABLE PURGE split)."""
-        for attempt in range(1000):
-            cur = self.state()
+
+        def build(cur: CatalogState) -> CatalogState:
             if name not in cur.pins:
                 raise KeyError(f"no such table {name!r}")
             pins = {k: v for k, v in cur.pins.items() if k != name}
-            try:
-                _cat_try_commit(
-                    self.root,
-                    CatalogState(
-                        version=cur.version + 1, pins=pins, views=cur.views
-                    ),
-                )
-                break
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
+            return CatalogState(version=cur.version + 1, pins=pins, views=cur.views)
+
+        _cat_commit(self.root, build)
         if purge:
             import shutil
 
@@ -401,9 +375,7 @@ class Catalog:
         return sorted(self.state().pins)
 
     def state(self) -> CatalogState:
-        v = _cat_current_version(self.root)
-        with open(_cat_version_path(self.root, v)) as f:
-            return CatalogState.from_json(json.load(f))
+        return _cat_state(self.root)
 
     def state_at(self, version: int) -> CatalogState:
         """The catalog's state as of ``version`` — CATALOG-level time
@@ -454,7 +426,7 @@ class Catalog:
         they pinned remain governed by each table's own expiry (plus
         the __catalog_pin tag for the current state). Returns the
         number of versions removed."""
-        cur = _cat_current_version(self.root)
+        cur = fmt.log_version(_cat_dir(self.root))
         cutoff = cur - max(1, int(keep_last)) + 1
         removed = 0
         cdir = _cat_dir(self.root)
@@ -557,8 +529,8 @@ class Catalog:
         head = sql.strip().split(None, 1)[0].upper() if sql.strip() else ""
         if head not in ("SELECT", "WITH"):
             raise ValueError("view SQL must be a SELECT/WITH statement")
-        for attempt in range(1000):
-            cur = self.state()
+
+        def build(cur: CatalogState) -> CatalogState:
             if name in cur.pins:
                 raise ValueError(f"{name!r} is a table")
             if name in cur.views and not replace:
@@ -567,36 +539,18 @@ class Catalog:
                 )
             views = dict(cur.views)
             views[name] = {"sql": sql, "created_version": cur.version + 1}
-            new = CatalogState(
-                version=cur.version + 1, pins=cur.pins, views=views
-            )
-            try:
-                _cat_try_commit(self.root, new)
-                return new
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
-        raise fmt.CommitConflict("catalog retries exhausted")
+            return CatalogState(version=cur.version + 1, pins=cur.pins, views=views)
+
+        return _cat_commit(self.root, build)
 
     def drop_view(self, name: str) -> None:
-        for attempt in range(1000):
-            cur = self.state()
+        def build(cur: CatalogState) -> CatalogState:
             if name not in cur.views:
                 raise KeyError(f"no such view {name!r}")
             views = {k: v for k, v in cur.views.items() if k != name}
-            try:
-                _cat_try_commit(
-                    self.root,
-                    CatalogState(
-                        version=cur.version + 1, pins=cur.pins, views=views
-                    ),
-                )
-                return
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
+            return CatalogState(version=cur.version + 1, pins=cur.pins, views=views)
+
+        _cat_commit(self.root, build)
 
     def list_views(self) -> list[str]:
         return sorted(self.state().views)
@@ -1238,8 +1192,7 @@ class Catalog:
         return CatalogTransaction(self)
 
     def _commit_pins(self, updates: dict[str, int | None]) -> CatalogState:
-        for attempt in range(1000):
-            cur = self.state()
+        def build(cur: CatalogState) -> CatalogState:
             pins = dict(cur.pins)
             for name, sid in updates.items():
                 if name in pins:
@@ -1248,17 +1201,9 @@ class Catalog:
                     )
                 else:
                     pins[name] = sid
-            new = CatalogState(
-                version=cur.version + 1, pins=pins, views=cur.views
-            )
-            try:
-                _cat_try_commit(self.root, new)
-                return new
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
-        raise fmt.CommitConflict("catalog retries exhausted")
+            return CatalogState(version=cur.version + 1, pins=pins, views=cur.views)
+
+        return _cat_commit(self.root, build)
 
 
 class CatalogTransaction:

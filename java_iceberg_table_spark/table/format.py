@@ -8,12 +8,15 @@ Layout under the table root::
     data/...                  parquet data files
     _pending/tc_<uuid>.json   writer->bookkeeper pending-commit handoff
 
-Commit = write new immutable artifacts, then CREATE ``v<N+1>.json``
-with O_EXCL. The exclusive create is the compare-and-swap: two
-committers racing to the same version — only one wins, the loser
-re-reads and rebases (the reference leans on HadoopTables' equivalent
-rename-based CAS, Constants.java:23, with
-``commit.retry.num-retries=20000``, Writer.java:116).
+Commit = write new immutable artifacts, then publish ``v<N+1>.json``
+with ``os.link`` (``publish_json``), which fails if the name exists.
+The link is the compare-and-swap: of two committers racing to the
+same version only one wins; the loser re-reads and rebases (the
+reference leans on HadoopTables' equivalent rename-based CAS,
+Constants.java:23, with ``commit.retry.num-retries=20000``,
+Writer.java:116). ``retry_commit`` is the one retry loop; it serves
+any ``v<N>.json`` log directory — a table's ``metadata/`` and a
+catalog's ``catalog/`` alike.
 
 A data file's existence on disk means nothing until a manifest in a
 committed metadata version references it — so writers can stream files
@@ -28,7 +31,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, Iterable
 
 
 class CommitConflict(Exception):
@@ -180,7 +183,7 @@ def _metadata_dir(root: str) -> str:
 
 
 def _version_path(root: str, version: int) -> str:
-    return os.path.join(_metadata_dir(root), f"v{version}.json")
+    return log_path(_metadata_dir(root), version)
 
 
 def _write_temp(path: str, payload: dict) -> str:
@@ -226,11 +229,17 @@ def read_json(path: str) -> dict:
         return json.load(f)
 
 
-def current_version(root: str) -> int:
-    """Resolve the latest committed version: start at the hint, probe
-    upward (the hint is best-effort, never authoritative)."""
-    mdir = _metadata_dir(root)
-    hint_path = os.path.join(mdir, "version-hint.text")
+def log_path(log_dir: str, version: int) -> str:
+    return os.path.join(log_dir, f"v{version}.json")
+
+
+def log_version(log_dir: str) -> int:
+    """Resolve the latest committed version of the ``v<N>.json`` log
+    in ``log_dir``: start at the hint, probe upward. The hint is
+    best-effort, never authoritative: an unreadable hint, or one
+    naming a version that no longer exists (expired by retention),
+    falls back to listing the directory."""
+    hint_path = os.path.join(log_dir, "version-hint.text")
     v = 0
     if os.path.exists(hint_path):
         try:
@@ -238,18 +247,68 @@ def current_version(root: str) -> int:
                 v = int(f.read().strip())
         except (ValueError, OSError):
             v = 0
-    if v < 1 or not os.path.exists(_version_path(root, v)):
+    if v < 1 or not os.path.exists(log_path(log_dir, v)):
         versions = [
             int(name[1:-5])
-            for name in os.listdir(mdir)
+            for name in os.listdir(log_dir)
             if name.startswith("v") and name.endswith(".json")
         ]
         if not versions:
-            raise FileNotFoundError(f"no table metadata under {mdir}")
+            raise FileNotFoundError(f"no versions under {log_dir}")
         return max(versions)
-    while os.path.exists(_version_path(root, v + 1)):
+    while os.path.exists(log_path(log_dir, v + 1)):
         v += 1
     return v
+
+
+def log_publish(log_dir: str, version: int, payload: dict) -> None:
+    """CAS-publish ``v<version>.json`` in ``log_dir`` (``publish_json``)
+    and then move the hint to it; raise CommitConflict if another
+    committer won the version."""
+    publish_json(log_path(log_dir, version), payload)
+    hint = os.path.join(log_dir, "version-hint.text")
+    tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as f:
+        f.write(str(version))
+    os.rename(tmp, hint)
+
+
+def retry_commit(
+    load: Callable[[], Any],
+    build: Callable[[Any], Any],
+    publish: Callable[[Any], None],
+    max_retries: int = 1000,
+    on_lost: Callable[[Any, Any], None] | None = None,
+) -> Any:
+    """The optimistic-retry loop of every versioned log.
+
+    Each attempt reads the head (``load()``), asks ``build(head)`` for
+    the next state (``version = head.version + 1``; None aborts and
+    returns the head), and CAS-publishes it (``publish(new)`` raises
+    CommitConflict when a rival won the version). A loser hands its
+    attempt to ``on_lost(head, new)``, backs off, re-reads and
+    rebuilds. Mirrors the reference's retry budget semantics
+    (Writer.java:116) with a bounded default."""
+    for attempt in range(max_retries):
+        current = load()
+        new = build(current)
+        if new is None:
+            return current
+        assert new.version == current.version + 1, "build() must bump version by 1"
+        try:
+            publish(new)
+            return new
+        except CommitConflict:
+            if on_lost is not None:
+                on_lost(current, new)
+            if attempt == max_retries - 1:
+                raise
+            time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
+    raise CommitConflict("retries exhausted")
+
+
+def current_version(root: str) -> int:
+    return log_version(_metadata_dir(root))
 
 
 def load_metadata(root: str) -> TableMetadata:
@@ -257,43 +316,56 @@ def load_metadata(root: str) -> TableMetadata:
     return TableMetadata.from_json(read_json(_version_path(root, v)))
 
 
-def _update_hint(root: str, version: int) -> None:
-    hint = os.path.join(_metadata_dir(root), "version-hint.text")
-    tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.rename(tmp, hint)
-
-
 def try_commit_version(root: str, meta: TableMetadata) -> None:
-    """CAS: atomically publish v<version>.json (``publish_json``); raise
+    """CAS: atomically publish v<version>.json (``log_publish``); raise
     CommitConflict if another committer won the race."""
-    publish_json(_version_path(root, meta.version), meta.to_json())
-    _update_hint(root, meta.version)
+    log_publish(_metadata_dir(root), meta.version, meta.to_json())
+
+
+def manifest_refs(snapshots: Iterable[Snapshot]) -> set[str]:
+    """Every manifest ``snapshots`` reference: data manifests, delete
+    manifests and the summary's ``added-manifest``, which a merging
+    append drops from its manifest list but added_files() still
+    reads."""
+    refs: set[str] = set()
+    for s in snapshots:
+        refs.update(s.manifests)
+        refs.update(s.delete_manifests)
+        am = s.summary.get("added-manifest")
+        if am is not None:
+            refs.add(am)
+    return refs
+
+
+def _unlink_lost_manifests(root: str, base: TableMetadata, lost: TableMetadata) -> None:
+    """Unlink the manifests a lost attempt wrote: referenced by its
+    metadata and not by the state it was built on, so nothing else
+    can reference them."""
+    for rel in manifest_refs(lost.snapshots) - manifest_refs(base.snapshots):
+        try:
+            os.remove(os.path.join(root, rel))
+        except OSError:
+            pass
 
 
 def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetadata:
-    """Optimistic-retry commit loop.
+    """Table commit: ``retry_commit`` over the table's metadata log.
 
     ``build(current: TableMetadata) -> TableMetadata | None`` must
-    return the next metadata (version = current.version + 1), rebased
-    on the freshly-read current state each attempt; returning None
-    aborts (no-op commit). Mirrors the reference's retry budget
-    semantics (Writer.java:116) with a bounded default."""
-    for attempt in range(max_retries):
-        current = load_metadata(root)
-        new = build(current)
-        if new is None:
-            return current
-        assert new.version == current.version + 1, "build() must bump version by 1"
-        try:
-            try_commit_version(root, new)
-            return new
-        except CommitConflict:
-            if attempt == max_retries - 1:
-                raise
-            time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
-    raise CommitConflict("retries exhausted")
+    return the next metadata, rebased on the freshly-read current
+    state each attempt; returning None aborts (no-op commit). Builds
+    write their manifests freely: after a lost CAS the attempt's new
+    manifests are unlinked before the retry, so commit contention
+    does not accumulate orphans (clean() is the backstop for
+    crashes). ``load_metadata`` and ``try_commit_version`` are looked
+    up at call time, so wrapping them observes every attempt."""
+    return retry_commit(
+        lambda: load_metadata(root),
+        build,
+        lambda new: try_commit_version(root, new),
+        max_retries,
+        lambda base, lost: _unlink_lost_manifests(root, base, lost),
+    )
 
 
 def write_manifest(root: str, entries: list[dict]) -> str:

@@ -1080,20 +1080,10 @@ class Table:
         single committer reads none."""
 
         result: list[Snapshot] = []
-        stale_manifests: list[str] = []
         # path sets of the manifests the current attempt wrote
         written: dict[str, frozenset] = {}
 
         def build(current: TableMetadata) -> TableMetadata | None:
-            # Manifests written by a LOST CAS attempt are referenced by
-            # nothing — unlink them before retrying so commit contention
-            # doesn't accumulate orphans (clean() is the backstop).
-            for rel in stale_manifests:
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
             written.clear()
             if branch is not None:
                 ref = current.refs.get(branch)
@@ -1136,7 +1126,6 @@ class Table:
                 rid += int(e["rows"])
             use = stamped
             manifest_rel = fmt.write_manifest(self.root, use)
-            stale_manifests.append(manifest_rel)
             if dedupe_paths:
                 written[manifest_rel] = frozenset(e["path"] for e in use)
             manifests = (list(parent.manifests) if parent else []) + [manifest_rel]
@@ -1162,7 +1151,6 @@ class Table:
                     manifests.append(fmt.write_manifest(self.root, shard))
                     if dedupe_paths:
                         written[manifests[-1]] = frozenset(e["path"] for e in shard)
-                stale_manifests.extend(manifests)
             snap = Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
                 parent_id=parent.snapshot_id if parent else None,
@@ -1555,17 +1543,16 @@ class Table:
         are re-filtered row-wise with the FULL residual predicate, so
         a selective OR never rewrites the whole table. Everything else
         is carried by reference. Rows where the predicate is NULL are
-        KEPT (SQL DELETE semantics). One atomic 'overwrite' snapshot;
-        on a concurrent commit the rewrite re-plans against the new
-        state (written orphans are reclaimed by snapshot-expiry GC)."""
+        KEPT (SQL DELETE semantics). One atomic 'overwrite' snapshot
+        (``_replan``)."""
         branches = _dnf_branches(filters)
         if not any(branches):
             raise ValueError("delete_rows requires at least one predicate")
-        for attempt in range(3):
-            md = self.metadata
+
+        def plan(md: TableMetadata):
             snap = md.current_snapshot()
             if snap is None:
-                return {"rewritten_files": 0, "deleted_rows": 0}
+                return {"rewritten_files": 0, "deleted_rows": 0}, None
             entries = self.files_of(snap)
             # candidate selection = UNION over OR-branches of the scan
             # planner's admissible set: below the manifest-volume
@@ -1585,7 +1572,7 @@ class Table:
                 )
             cands = [e for e in entries if e["path"] in cand_path_set]
             if not cands:
-                return {"rewritten_files": 0, "deleted_rows": 0}
+                return {"rewritten_files": 0, "deleted_rows": 0}, None
             cand_paths = {e["path"] for e in cands}
             keep = [e for e in entries if e["path"] not in cand_paths]
             match = F.coalesce(self._dnf_predicate(branches), F.lit(False))
@@ -1598,18 +1585,15 @@ class Table:
                 survivors, prefix="rw", n_tasks=max(1, len(cands) // 4)
             )
             deleted = sum(e["rows"] for e in cands) - sum(e["rows"] for e in new_entries)
-            committed = self._commit_overwrite(
-                snap.snapshot_id,
+            return {
+                "rewritten_files": len(cands), "deleted_rows": deleted
+            }, self._overwrite_shape(
                 keep,
                 new_entries,
-                {
-                    "rewritten-files": len(cands),
-                    "deleted-rows": deleted,
-                },
+                {"rewritten-files": len(cands), "deleted-rows": deleted},
             )
-            if committed:
-                return {"rewritten_files": len(cands), "deleted_rows": deleted}
-        raise fmt.CommitConflict("delete_rows lost the commit race 3 times")
+
+        return self._replan("delete_rows", plan)
 
     def update_where(
         self,
@@ -1630,8 +1614,8 @@ class Table:
         job clustered by partition bucket (updating the partition
         source re-buckets rows automatically — the write path derives
         buckets from row content), untouched files are carried by
-        reference, one atomic 'overwrite' snapshot with optimistic
-        re-plan on conflict. ``filters`` takes the same shapes as
+        reference, one atomic 'overwrite' snapshot (``_replan``).
+        ``filters`` takes the same shapes as
         ``delete_rows`` (conjunction, or DnfFilter for OR trees)."""
         branches = _dnf_branches(filters)
         if not any(branches):
@@ -1641,11 +1625,11 @@ class Table:
         for c in set_exprs:
             if c not in by_name:
                 raise ValueError(f"unknown column {c!r}")
-        for attempt in range(3):
-            md = self.metadata
+
+        def plan(md: TableMetadata):
             snap = md.current_snapshot()
             if snap is None:
-                return {"rewritten_files": 0, "updated_rows": 0}
+                return {"rewritten_files": 0, "updated_rows": 0}, None
             entries = self.files_of(snap)
             # same union-of-branches planning as delete_rows — the
             # distributed manifest scan kicks in past the threshold
@@ -1659,7 +1643,7 @@ class Table:
                 )
             cands = [e for e in entries if e["path"] in cand_path_set]
             if not cands:
-                return {"rewritten_files": 0, "updated_rows": 0}
+                return {"rewritten_files": 0, "updated_rows": 0}, None
             cand_paths = {e["path"] for e in cands}
             keep = [e for e in entries if e["path"] not in cand_paths]
             match = F.coalesce(self._dnf_predicate(branches), F.lit(False))
@@ -1687,21 +1671,15 @@ class Table:
             new_entries = self._write_data_files(
                 out, prefix="up", n_tasks=max(1, len(cands) // 4)
             )
-            committed = self._commit_overwrite(
-                snap.snapshot_id,
+            return {
+                "rewritten_files": len(cands), "updated_rows": updated_rows
+            }, self._overwrite_shape(
                 keep,
                 new_entries,
-                {
-                    "rewritten-files": len(cands),
-                    "updated-rows": updated_rows,
-                },
+                {"rewritten-files": len(cands), "updated-rows": updated_rows},
             )
-            if committed:
-                return {
-                    "rewritten_files": len(cands),
-                    "updated_rows": updated_rows,
-                }
-        raise fmt.CommitConflict("update_where lost the commit race 3 times")
+
+        return self._replan("update_where", plan)
 
     def upsert(
         self, spark: SparkSession, updates: DataFrame, key_cols: list[str]
@@ -1716,10 +1694,9 @@ class Table:
         rewrites one bucket's files, not the table. The updates set is
         broadcast into a left-anti join against each rewritten file
         group — the big side (table files) never shuffles."""
-        for attempt in range(3):
-            md = self.metadata
+
+        def plan(md: TableMetadata):
             snap = md.current_snapshot()
-            t = self.transform
             entries = self.files_of(snap) if snap is not None else []
             cands = _key_bound_candidates(
                 entries, _key_bounds(updates, key_cols), key_cols
@@ -1743,23 +1720,22 @@ class Table:
             replaced = sum(e["rows"] for e in cands) - sum(
                 e["rows"] for e in new_entries
             )
-            committed = self._commit_overwrite(
-                snap.snapshot_id if snap is not None else None,
+            upserted = sum(e["rows"] for e in inserted)
+            return {
+                "rewritten_files": len(cands),
+                "replaced_rows": replaced,
+                "upserted_rows": upserted,
+            }, self._overwrite_shape(
                 keep,
                 new_entries + inserted,
                 {
                     "rewritten-files": len(cands),
                     "replaced-rows": replaced,
-                    "upserted-rows": sum(e["rows"] for e in inserted),
+                    "upserted-rows": upserted,
                 },
             )
-            if committed:
-                return {
-                    "rewritten_files": len(cands),
-                    "replaced_rows": replaced,
-                    "upserted_rows": sum(e["rows"] for e in inserted),
-                }
-        raise fmt.CommitConflict("upsert lost the commit race 3 times")
+
+        return self._replan("upsert", plan)
 
     def merge_into(
         self,
@@ -1887,8 +1863,8 @@ class Table:
                     "to one row per key first (MERGE matched-clause "
                     "cardinality violation)"
                 )
-        for attempt in range(3):
-            md = self.metadata
+
+        def plan(md: TableMetadata):
             snap = md.current_snapshot()
             entries = self.files_of(snap) if snap is not None else []
             cands = _key_bound_candidates(entries, _key_bounds(source, on), on)
@@ -2048,9 +2024,14 @@ class Table:
                     "inserted_rows": 0,
                     "source_deleted_rows": 0,
                     "source_updated_rows": 0,
-                }
-            committed = self._commit_row_delta(
-                snap.snapshot_id if snap is not None else None,
+                }, None
+            return {
+                "updated_rows": n_updated,
+                "deleted_rows": n_deleted,
+                "inserted_rows": n_inserted,
+                "source_deleted_rows": n_src_deleted,
+                "source_updated_rows": n_src_updated,
+            }, self._row_delta_shape(
                 del_entry,
                 data_entries,
                 {
@@ -2067,61 +2048,36 @@ class Table:
                     ),
                 },
             )
-            if committed:
-                return {
-                    "updated_rows": n_updated,
-                    "deleted_rows": n_deleted,
-                    "inserted_rows": n_inserted,
-                    "source_deleted_rows": n_src_deleted,
-                    "source_updated_rows": n_src_updated,
-                }
-        raise fmt.CommitConflict("merge_into lost the commit race 3 times")
 
-    def _commit_row_delta(
-        self,
-        expected_parent: int | None,
-        del_entry: dict | None,
-        data_entries: list[dict],
-        summary: dict,
-    ) -> Snapshot | None:
-        """One atomic 'merge' snapshot adding an equality-delete entry
-        AND new data files with the SAME sequence number: the delete
-        masks only rows in files at seq < N, so the replacement rows it
-        travels with are never masked — the row-delta commit shape
-        MERGE needs (Iceberg RowDelta). Refuses (returns None, caller
-        retries) when the head moved past the snapshot the delta was
-        computed against — the matched set may be stale."""
-        result: list[Snapshot] = []
-        stale: list[str] = []
+        return self._replan("merge_into", plan)
 
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale:  # lost-CAS leftovers
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale.clear()
-            parent = current.current_snapshot()
-            parent_id = parent.snapshot_id if parent else None
-            if parent_id != expected_parent:
-                result.clear()
-                return None  # computed against a stale head: recompute
+    def _row_delta_shape(
+        self, del_entry: dict | None, data_entries: list[dict], summary: dict
+    ):
+        """Snapshot shape of one atomic 'merge' commit adding an
+        equality-delete entry AND new data files with the SAME sequence
+        number: the delete masks only rows in files at seq < N, so the
+        replacement rows it travels with are never masked — the
+        row-delta commit shape MERGE needs (Iceberg RowDelta). For
+        ``_replan``."""
+
+        def make(current: TableMetadata, parent: Snapshot | None) -> Snapshot:
             seq = (parent.sequence if parent else 0) + 1
             manifests = list(parent.manifests) if parent else []
             delete_manifests = list(parent.delete_manifests) if parent else []
             if data_entries:
-                m = fmt.write_manifest(
-                    self.root, [{**e, "seq": seq} for e in data_entries]
+                manifests.append(
+                    fmt.write_manifest(
+                        self.root, [{**e, "seq": seq} for e in data_entries]
+                    )
                 )
-                stale.append(m)
-                manifests = manifests + [m]
             if del_entry is not None:
-                dm = fmt.write_manifest(self.root, [{**del_entry, "seq": seq}])
-                stale.append(dm)
-                delete_manifests = delete_manifests + [dm]
-            snap = Snapshot(
+                delete_manifests.append(
+                    fmt.write_manifest(self.root, [{**del_entry, "seq": seq}])
+                )
+            return Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent_id,
+                parent_id=parent.snapshot_id if parent else None,
                 timestamp_ms=fmt.now_ms(),
                 schema_id=current.current_schema_id,
                 operation="merge",
@@ -2130,17 +2086,8 @@ class Table:
                 delete_manifests=delete_manifests,
                 summary=summary,
             )
-            result.clear()
-            result.append(snap)
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [snap],
-                current_snapshot_id=snap.snapshot_id,
-            )
 
-        fmt.commit(self.root, build)
-        return result[0] if result else None
+        return make
 
     # ---------- merge-on-read row-level deletes (Iceberg v2) ----------
 
@@ -2365,21 +2312,13 @@ class Table:
         entry's applicability sequence is stamped inside build() (it
         depends on the parent actually committed against)."""
         result: list[Snapshot] = []
-        stale_manifests: list[str] = []
 
         def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
             parent = current.current_snapshot()
             if parent is None:
                 return None
             seq = parent.sequence + 1
             m = fmt.write_manifest(self.root, [{**del_entry, "seq": seq}])
-            stale_manifests.append(m)
             snap = Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
                 parent_id=parent.snapshot_id,
@@ -2605,11 +2544,11 @@ class Table:
         delete files from metadata (Iceberg's rewrite_position_delete_
         files / major compaction): rewrite exactly the data files a
         delete could still touch, carry the rest by reference."""
-        for attempt in range(3):
-            md = self.metadata
+
+        def plan(md: TableMetadata):
             snap = md.current_snapshot()
             if snap is None or not snap.delete_manifests:
-                return {"rewritten_files": 0, "dropped_delete_files": 0}
+                return {"rewritten_files": 0, "dropped_delete_files": 0}, None
             del_entries = [
                 e
                 for m in snap.delete_manifests
@@ -2647,8 +2586,10 @@ class Table:
                 new_entries = self._write_data_files(
                     clean_df, prefix="md", n_tasks=max(1, len(affected) // 4)
                 )
-            committed = self._commit_overwrite(
-                snap.snapshot_id,
+            return {
+                "rewritten_files": len(affected),
+                "dropped_delete_files": len(del_entries),
+            }, self._overwrite_shape(
                 carried,
                 new_entries,
                 {
@@ -2662,12 +2603,8 @@ class Table:
                 },
                 drop_deletes=True,
             )
-            if committed:
-                return {
-                    "rewritten_files": len(affected),
-                    "dropped_delete_files": len(del_entries),
-                }
-        raise fmt.CommitConflict("rewrite_deletes lost the commit race 3 times")
+
+        return self._replan("rewrite_deletes", plan)
 
     def overwrite_entries(
         self,
@@ -2689,8 +2626,8 @@ class Table:
         never a mix. This is the connector's mode('overwrite') commit
         (Spark INSERT OVERWRITE static/dynamic semantics)."""
         cur_sid = self.current_spec_id()
-        for attempt in range(3):
-            md = self.metadata
+
+        def plan(md: TableMetadata):
             snap = md.current_snapshot()
             cur = self.files_of(snap) if snap is not None else []
             if partitions is None:
@@ -2703,8 +2640,7 @@ class Table:
                     if int(e.get("spec_id", 0) or 0) != cur_sid
                     or _entry_partition_key(e) not in pset
                 ]
-            if self._commit_overwrite(
-                snap.snapshot_id if snap is not None else None,
+            return None, self._overwrite_shape(
                 carried,
                 entries,
                 {
@@ -2714,53 +2650,75 @@ class Table:
                     **(extra_summary or {}),
                 },
                 drop_deletes=partitions is None,
-            ):
-                return
-        raise fmt.CommitConflict("overwrite lost the commit race 3 times")
+            )
 
-    def _commit_overwrite(
+        self._replan("overwrite", plan)
+
+    def _replan(self, verb: str, plan) -> object:
+        """The one re-plan loop of the rewrite verbs: plan against
+        snapshot S, commit only if the head is still S, otherwise
+        re-plan; after 3 plans raise CommitConflict.
+
+        ``plan(md)`` reads the head of ``md`` (a fresh metadata load)
+        and returns ``(result, make)``. A None ``make`` means nothing
+        to commit and ``result`` is returned as is. Otherwise
+        ``make(current, parent)`` builds the new head snapshot
+        (``_overwrite_shape``, ``_row_delta_shape``) inside the commit.
+        A plan is only valid against the head it read — its matched
+        set, carried entries and rewritten files all derive from it —
+        so a moved head discards it rather than rebasing it. Data
+        files a discarded plan wrote are orphans for clean(); its
+        manifests never reach disk. ``result`` is returned only once
+        ``make``'s snapshot has committed."""
+        for _ in range(3):
+            md = self.metadata
+            result, make = plan(md)
+            if make is None:
+                return result
+            made: list[Snapshot] = []
+
+            def build(current: TableMetadata) -> TableMetadata | None:
+                if current.current_snapshot_id != md.current_snapshot_id:
+                    return None
+                made.append(make(current, current.current_snapshot()))
+                return replace(
+                    current,
+                    version=current.version + 1,
+                    snapshots=current.snapshots + [made[-1]],
+                    current_snapshot_id=made[-1].snapshot_id,
+                )
+
+            head = fmt.commit(self.root, build).current_snapshot_id
+            if made and head == made[-1].snapshot_id:
+                return result
+        raise fmt.CommitConflict(f"{verb} lost the commit race 3 times")
+
+    def _overwrite_shape(
         self,
-        expected_parent: int | None,
         carried: list[dict],
         rewritten: list[dict],
         summary: dict,
         drop_deletes: bool = False,
-    ) -> bool:
-        """Commit an 'overwrite' snapshot iff the table still points at
-        ``expected_parent`` (the rewrite's base). Returns False on a
-        lost race so the caller can re-plan against fresh state.
+        operation: str = "overwrite",
+    ):
+        """Snapshot shape of a rewrite commit (for ``_replan``): one
+        manifest listing ``carried`` entries, which keep their original
+        sequence stamp (absent = pre-MOR = 0), and ``rewritten``
+        (freshly written files), which get this commit's sequence.
+        Pending MOR delete manifests are carried — they still apply to
+        the files carried by reference — unless ``drop_deletes``: the
+        rewrite applied every delete that could touch its files."""
 
-        ``carried`` entries keep their original sequence stamp (absent
-        = pre-MOR = 0); ``rewritten`` (freshly written files) get this
-        commit's sequence. Pending MOR delete manifests are carried —
-        they still apply to the files carried by reference — unless
-        ``drop_deletes`` (the rewrite_deletes materialization, which
-        has rewritten every file a delete could touch)."""
-
-        stale_manifests: list[str] = []
-
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers (see append_entries)
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            parent_id = parent.snapshot_id if parent else None
-            if parent_id != expected_parent:
-                return None
+        def make(current: TableMetadata, parent: Snapshot | None) -> Snapshot:
             seq = (parent.sequence if parent else 0) + 1
             stamped = list(carried) + [{**e, "seq": seq} for e in rewritten]
-            manifest = fmt.write_manifest(self.root, stamped)
-            stale_manifests.append(manifest)
-            new_snap = Snapshot(
+            return Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent_id,
+                parent_id=parent.snapshot_id if parent else None,
                 timestamp_ms=fmt.now_ms(),
                 schema_id=current.current_schema_id,
-                operation="overwrite",
-                manifests=[manifest],
+                operation=operation,
+                manifests=[fmt.write_manifest(self.root, stamped)],
                 sequence=seq,
                 delete_manifests=(
                     [] if drop_deletes or parent is None
@@ -2768,18 +2726,8 @@ class Table:
                 ),
                 summary=summary,
             )
-            build.result = new_snap
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [new_snap],
-                current_snapshot_id=new_snap.snapshot_id,
-            )
 
-        build.result = None
-        fmt.commit(self.root, build)
-        return build.result is not None
-
+        return make
 
     def expire_snapshots(
         self,
@@ -2896,20 +2844,8 @@ class Table:
         # which no longer knows them). A kept snapshot's added-manifest
         # (summary) is live even when manifest merging dropped it from
         # the manifests list: added_files() still reads it.
-        live_manifests = {
-            m for s in committed.snapshots for m in s.manifests + s.delete_manifests
-        }
-        for s in committed.snapshots:
-            am = s.summary.get("added-manifest")
-            if am is not None:
-                live_manifests.add(am)
-        dead_manifests = set()
-        for s in expired:
-            dead_manifests.update(s.manifests)
-            dead_manifests.update(s.delete_manifests)
-            am = s.summary.get("added-manifest")
-            if am is not None:
-                dead_manifests.add(am)
+        live_manifests = fmt.manifest_refs(committed.snapshots)
+        dead_manifests = fmt.manifest_refs(expired)
         dead_only = [
             m
             for m in sorted(dead_manifests - live_manifests)
@@ -3009,14 +2945,8 @@ class Table:
                             candidates.append(os.path.relpath(path, self.root))
                     except OSError:
                         continue
-        md = self.metadata  # fresh load: supersedes every listed candidate
-        live_manifests = {
-            m for s in md.snapshots for m in s.manifests + s.delete_manifests
-        }
-        for s in md.snapshots:
-            am = s.summary.get("added-manifest")
-            if am is not None:
-                live_manifests.add(am)
+        # fresh load: supersedes every listed candidate
+        live_manifests = fmt.manifest_refs(self.metadata.snapshots)
         threshold = (
             DIST_PLAN_MIN_MANIFEST_BYTES
             if distributed_threshold_bytes is None
@@ -3093,98 +3023,69 @@ class Table:
         bucket so transform pruning stays exact."""
         from .zorder import zorder_frame
 
-        md = self.metadata
-        snap = md.current_snapshot()
-        if snap is None:
-            return {"rewritten": 0, "new_files": 0}
-        entries = self.files_of(snap)
-        if not entries:
-            return {"rewritten": 0, "new_files": 0}
-        import uuid as uuid_mod
-
-        batch = uuid_mod.uuid4().hex
-        # group by (spec_id, partition), not partition value alone:
-        # after partition evolution the same numeric bucket under two
-        # specs covers DIFFERENT value ranges, and the rewritten file
-        # must keep its own spec stamp or every read path would
-        # interpret its bucket under the wrong width.
-        by_partition: dict[tuple, list[dict]] = {}
-        for e in entries:
-            key = (int(e.get("spec_id", 0) or 0), _entry_partition_key(e))
-            by_partition.setdefault(key, []).append(e)
-        new_entries: list[dict] = []
-        # row.lineage=preserve: carry (__row_id, __upd_seq) through the
-        # layout rewrite exactly as compact_data_files does
-        preserve = md.properties.get("row.lineage") == "preserve"
-        for (spec_id, part), es in by_partition.items():
-            df = (
-                self._read_with_lineage(spark, es, snap)
-                if preserve
-                else self._read_with_deletes(spark, es, snap)
-            )
-            sub = _partition_subdir(spec_id, part, "clustered")
-            out_dir = os.path.join(self.root, "data", f"z-{batch}", sub)
-            with _micros_timestamps(spark):
-                zorder_frame(df, cluster_by, n_files).write.parquet(out_dir)
-            for path in glob.glob(os.path.join(out_dir, "*.parquet")):
-                rel = os.path.relpath(path, self.root)
-                st = file_stats(path)
-                st["columns"].pop("__row_id", None)
-                st["columns"].pop("__upd_seq", None)
-                new_entries.append(
-                    {
-                        "path": rel,
-                        **({"row_ids_inline": True} if preserve else {}),
-                        "rows": st["rows"],
-                        "bytes": st["bytes"],
-                        **_stamp_partition(part),
-                        "columns": st["columns"],
-                        **({"spec_id": spec_id} if spec_id else {}),
-                    }
+        def plan(md: TableMetadata):
+            snap = md.current_snapshot()
+            if snap is None:
+                return {"rewritten": 0, "new_files": 0}, None
+            entries = self.files_of(snap)
+            if not entries:
+                return {"rewritten": 0, "new_files": 0}, None
+            batch = uuid.uuid4().hex
+            # group by (spec_id, partition), not partition value alone:
+            # after partition evolution the same numeric bucket under two
+            # specs covers DIFFERENT value ranges, and the rewritten file
+            # must keep its own spec stamp or every read path would
+            # interpret its bucket under the wrong width.
+            by_partition: dict[tuple, list[dict]] = {}
+            for e in entries:
+                key = (int(e.get("spec_id", 0) or 0), _entry_partition_key(e))
+                by_partition.setdefault(key, []).append(e)
+            new_entries: list[dict] = []
+            # row.lineage=preserve: carry (__row_id, __upd_seq) through the
+            # layout rewrite exactly as compact_data_files does
+            preserve = md.properties.get("row.lineage") == "preserve"
+            for (spec_id, part), es in by_partition.items():
+                df = (
+                    self._read_with_lineage(spark, es, snap)
+                    if preserve
+                    else self._read_with_deletes(spark, es, snap)
                 )
+                sub = _partition_subdir(spec_id, part, "clustered")
+                out_dir = os.path.join(self.root, "data", f"z-{batch}", sub)
+                with _micros_timestamps(spark):
+                    zorder_frame(df, cluster_by, n_files).write.parquet(out_dir)
+                for path in glob.glob(os.path.join(out_dir, "*.parquet")):
+                    rel = os.path.relpath(path, self.root)
+                    st = file_stats(path)
+                    st["columns"].pop("__row_id", None)
+                    st["columns"].pop("__upd_seq", None)
+                    new_entries.append(
+                        {
+                            "path": rel,
+                            **({"row_ids_inline": True} if preserve else {}),
+                            "rows": st["rows"],
+                            "bytes": st["bytes"],
+                            **_stamp_partition(part),
+                            "columns": st["columns"],
+                            **({"spec_id": spec_id} if spec_id else {}),
+                        }
+                    )
 
-        self._attach_blooms(spark, new_entries)
-        stale_manifests: list[str] = []
-
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            if parent is None or parent.snapshot_id != snap.snapshot_id:
-                return None  # table moved underneath; caller retries
-            seq = parent.sequence + 1
-            manifest = fmt.write_manifest(
-                self.root, [{**e, "seq": seq} for e in new_entries]
-            )
-            stale_manifests.append(manifest)
-            new_snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="replace",
-                manifests=[manifest],
-                sequence=seq,
-                delete_manifests=[],  # applied during the rewrite
-                summary={
+            self._attach_blooms(spark, new_entries)
+            result = {"rewritten": len(entries), "new_files": len(new_entries)}
+            return result, self._overwrite_shape(
+                [],
+                new_entries,
+                {
                     "rewritten-files": len(entries),
                     "new-files": len(new_entries),
                     "cluster-by": ",".join(cluster_by),
                 },
-            )
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [new_snap],
-                current_snapshot_id=new_snap.snapshot_id,
+                drop_deletes=True,  # applied during the rewrite
+                operation="replace",
             )
 
-        fmt.commit(self.root, build)
-        return {"rewritten": len(entries), "new_files": len(new_entries)}
+        return self._replan("rewrite_clustered", plan)
 
     def compact_data_files(
         self,
@@ -3208,126 +3109,93 @@ class Table:
         table; older-spec files are conservatively left alone
         (partition values are not comparable across specs — a full
         pass migrates them)."""
-        md = self.metadata
-        snap = md.current_snapshot()
-        if snap is None:
-            return {"rewritten": 0, "new_files": 0}
-        entries = self.files_of(snap)
-        small = [e for e in entries if e["bytes"] < target_file_bytes // 2]
-        if partitions is not None:
-            cur_sid = self.current_spec_id(md)
-            small = [
-                e
-                for e in small
-                if int(e.get("spec_id", 0) or 0) == cur_sid
-                and _entry_partition_key(e) in partitions
-            ]
-        if len(small) < 2:
-            return {"rewritten": 0, "new_files": 0}
-        keep = [e for e in entries if e not in small]
-        t = self.transform
-        new_entries: list[dict] = []
-        import uuid as uuid_mod
 
-        batch = uuid_mod.uuid4().hex
-        # (spec_id, partition) grouping — see rewrite_clustered: a
-        # bucket value is only meaningful under the spec that wrote it.
-        by_partition: dict[tuple, list[dict]] = {}
-        for e in small:
-            key = (int(e.get("spec_id", 0) or 0), _entry_partition_key(e))
-            by_partition.setdefault(key, []).append(e)
-        # row.lineage=preserve: the rewrite materializes each row's
-        # (__row_id, __upd_seq) as physical columns in the compacted
-        # files, so scan_with_lineage keeps answering the SAME ids
-        # across maintenance — the Iceberg-v3 rewrite contract. Costs
-        # 2 int64 columns only in rewritten files; plain scans read
-        # with an explicit schema and never see them.
-        preserve = md.properties.get("row.lineage") == "preserve"
-        for (spec_id, part), es in by_partition.items():
-            # deletes-applied read: compacted rows carry THIS commit's
-            # sequence, so pending equality deletes stop applying to
-            # them — they must already be filtered out here
-            df = (
-                self._read_with_lineage(spark, es, snap)
-                if preserve
-                else self._read_with_deletes(spark, es, snap)
-            )
-            total = sum(e["bytes"] for e in es)
-            n_out = max(1, total // target_file_bytes)
-            sub = _partition_subdir(spec_id, part, "compacted")
-            out_dir = os.path.join(self.root, "data", f"c-{batch}", sub)
-            if sort_by:
-                # range-partition + sort: every output file covers a
-                # DISJOINT key range, so its min/max stats are tight
-                # and plan_files skipping becomes surgical — the
-                # cluster-by/z-order analogue for 1-d keys.
-                with _micros_timestamps(spark):
-                    (
-                        df.repartitionByRange(int(n_out), *sort_by)
-                        .sortWithinPartitions(*sort_by)
-                        .write.parquet(out_dir)
-                    )
-            else:
-                with _micros_timestamps(spark):
-                    df.coalesce(int(n_out)).write.parquet(out_dir)
-            for path in glob.glob(os.path.join(out_dir, "*.parquet")):
-                rel = os.path.relpath(path, self.root)
-                st = file_stats(path)
-                st["columns"].pop("__row_id", None)  # lineage carry, not data
-                st["columns"].pop("__upd_seq", None)
-                new_entries.append(
-                    {
-                        "path": rel,
-                        "rows": st["rows"],
-                        "bytes": st["bytes"],
-                        **_stamp_partition(part),
-                        "columns": st["columns"],
-                        **({"row_ids_inline": True} if preserve else {}),
-                        **({"spec_id": spec_id} if spec_id else {}),
-                    }
+        def plan(md: TableMetadata):
+            snap = md.current_snapshot()
+            if snap is None:
+                return {"rewritten": 0, "new_files": 0}, None
+            entries = self.files_of(snap)
+            small = [e for e in entries if e["bytes"] < target_file_bytes // 2]
+            if partitions is not None:
+                cur_sid = self.current_spec_id(md)
+                small = [
+                    e
+                    for e in small
+                    if int(e.get("spec_id", 0) or 0) == cur_sid
+                    and _entry_partition_key(e) in partitions
+                ]
+            if len(small) < 2:
+                return {"rewritten": 0, "new_files": 0}, None
+            keep = [e for e in entries if e not in small]
+            new_entries: list[dict] = []
+            batch = uuid.uuid4().hex
+            # (spec_id, partition) grouping — see rewrite_clustered: a
+            # bucket value is only meaningful under the spec that wrote it.
+            by_partition: dict[tuple, list[dict]] = {}
+            for e in small:
+                key = (int(e.get("spec_id", 0) or 0), _entry_partition_key(e))
+                by_partition.setdefault(key, []).append(e)
+            # row.lineage=preserve: the rewrite materializes each row's
+            # (__row_id, __upd_seq) as physical columns in the compacted
+            # files, so scan_with_lineage keeps answering the SAME ids
+            # across maintenance — the Iceberg-v3 rewrite contract. Costs
+            # 2 int64 columns only in rewritten files; plain scans read
+            # with an explicit schema and never see them.
+            preserve = md.properties.get("row.lineage") == "preserve"
+            for (spec_id, part), es in by_partition.items():
+                # deletes-applied read: compacted rows carry THIS commit's
+                # sequence, so pending equality deletes stop applying to
+                # them — they must already be filtered out here
+                df = (
+                    self._read_with_lineage(spark, es, snap)
+                    if preserve
+                    else self._read_with_deletes(spark, es, snap)
                 )
+                total = sum(e["bytes"] for e in es)
+                n_out = max(1, total // target_file_bytes)
+                sub = _partition_subdir(spec_id, part, "compacted")
+                out_dir = os.path.join(self.root, "data", f"c-{batch}", sub)
+                if sort_by:
+                    # range-partition + sort: every output file covers a
+                    # DISJOINT key range, so its min/max stats are tight
+                    # and plan_files skipping becomes surgical — the
+                    # cluster-by/z-order analogue for 1-d keys.
+                    with _micros_timestamps(spark):
+                        (
+                            df.repartitionByRange(int(n_out), *sort_by)
+                            .sortWithinPartitions(*sort_by)
+                            .write.parquet(out_dir)
+                        )
+                else:
+                    with _micros_timestamps(spark):
+                        df.coalesce(int(n_out)).write.parquet(out_dir)
+                for path in glob.glob(os.path.join(out_dir, "*.parquet")):
+                    rel = os.path.relpath(path, self.root)
+                    st = file_stats(path)
+                    st["columns"].pop("__row_id", None)  # lineage carry, not data
+                    st["columns"].pop("__upd_seq", None)
+                    new_entries.append(
+                        {
+                            "path": rel,
+                            "rows": st["rows"],
+                            "bytes": st["bytes"],
+                            **_stamp_partition(part),
+                            "columns": st["columns"],
+                            **({"row_ids_inline": True} if preserve else {}),
+                            **({"spec_id": spec_id} if spec_id else {}),
+                        }
+                    )
 
-        self._attach_blooms(spark, new_entries)
-        stale_manifests: list[str] = []
-
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers (see append_entries)
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            if parent is None or parent.snapshot_id != snap.snapshot_id:
-                return None  # table moved underneath; caller retries compaction
-            seq = parent.sequence + 1
-            manifest = fmt.write_manifest(
-                self.root, keep + [{**e, "seq": seq} for e in new_entries]
-            )
-            stale_manifests.append(manifest)
-            new_snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
+            self._attach_blooms(spark, new_entries)
+            result = {"rewritten": len(small), "new_files": len(new_entries)}
+            return result, self._overwrite_shape(
+                keep,
+                new_entries,
+                {"compacted-files": len(small), "new-files": len(new_entries)},
                 operation="replace",
-                manifests=[manifest],
-                sequence=seq,
-                delete_manifests=list(parent.delete_manifests),
-                summary={
-                    "compacted-files": len(small),
-                    "new-files": len(new_entries),
-                },
-            )
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [new_snap],
-                current_snapshot_id=new_snap.snapshot_id,
             )
 
-        fmt.commit(self.root, build)
-        return {"rewritten": len(small), "new_files": len(new_entries)}
+        return self._replan("compact_data_files", plan)
 
     # ---------- read plane ----------
 

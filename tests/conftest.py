@@ -30,6 +30,43 @@ def duck(sf_dir):
     con.close()
 
 
+@pytest.fixture()
+def lose_next_cas(monkeypatch):
+    """Arm one lost CAS race: after ``lose_next_cas(rival)`` the next
+    ``format.try_commit_version`` call first runs ``rival(root)`` — a
+    rival commit that lands — and then raises CommitConflict; every
+    other call publishes normally. Without ``rival`` the rival commit
+    is a no-op version bump of the same table. Returns the list of
+    roots whose CAS was lost, for the test to assert the race ran."""
+    from dataclasses import replace
+
+    from java_iceberg_table_spark.table import format as fmt
+
+    real = fmt.try_commit_version
+    armed: list = []
+    lost: list[str] = []
+
+    def bump(root):
+        cur = fmt.load_metadata(root)
+        real(root, replace(cur, version=cur.version + 1))
+
+    def racing(root, meta):
+        if not armed:
+            return real(root, meta)
+        rival = armed.pop() or bump
+        rival(root)
+        lost.append(root)
+        raise fmt.CommitConflict("lost the CAS race to a rival commit")
+
+    monkeypatch.setattr(fmt, "try_commit_version", racing)
+
+    def arm(rival=None) -> list[str]:
+        armed.append(rival)
+        return lost
+
+    return arm
+
+
 def pytest_collection_modifyitems(config, items):
     """Apply the `slow` marker from tests/slow_tests.txt (see
     pytest.ini): a data-driven list generated from a full

@@ -295,6 +295,24 @@ def test_expire_versions(spark, cat):
     assert cat.read(spark, "t").count() == 30
 
 
+def test_stale_hint_survives_expire_versions(cat):
+    """A late hint write naming an old version must not wedge the
+    catalog once retention deletes that version: the head resolves
+    past the missing hint and later commits still land."""
+    import os
+
+    for i in range(5):
+        cat.create_view(f"v{i}", "SELECT 1 AS x")
+    head = cat.state().version
+    with open(os.path.join(cat.root, "catalog", "version-hint.text"), "w") as f:
+        f.write("2")
+    cat.expire_versions(keep_last=2)
+    assert 2 not in cat.versions()
+    assert cat.state().version == head
+    assert cat.create_view("late", "SELECT 2 AS x").version == head + 1
+    assert cat.state().version == head + 1
+
+
 @pytest.mark.parametrize("seed", [11, 47])
 def test_catalog_randomized_consistency(spark, cat, seed):
     """Randomized interleaving of transactions (moves, appends,

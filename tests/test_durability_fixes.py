@@ -14,6 +14,7 @@ machinery:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 
@@ -25,7 +26,6 @@ from java_iceberg_table_spark.ingest.bookkeeper import Bookkeeper
 from java_iceberg_table_spark.ingest.writer import Writer
 from java_iceberg_table_spark.table import create_table, load_table, truncate
 from java_iceberg_table_spark.table import format as fmt
-from java_iceberg_table_spark.table.format import CommitConflict
 from java_iceberg_table_spark.table.table import RetentionGapError
 
 SIMPLE_SCHEMA = StructType(
@@ -48,7 +48,7 @@ def _df(spark, lo, hi):
     )
 
 
-def test_expire_survives_concurrent_tag_conflict(spark, troot, monkeypatch):
+def test_expire_survives_concurrent_tag_conflict(spark, troot, lose_next_cas):
     """A create_tag that wins the CAS race mid-expire must keep its
     pinned snapshot's files: deletion happens only after the commit
     that actually observed the tag."""
@@ -58,23 +58,12 @@ def test_expire_survives_concurrent_tag_conflict(spark, troot, monkeypatch):
     first_files = {e["path"] for e in tbl.plan_files()}
     tbl.append(_df(spark, 100, 200))
 
-    real = fmt.try_commit_version
-    state = {"injected": False}
-
-    def racing(root, meta):
-        if not state["injected"]:
-            state["injected"] = True
-            # rival commit lands first: tag pins the snapshot the
-            # in-flight expire computed as expired
-            tbl.create_tag("pin-old", snapshot_id=first)
-            raise CommitConflict("lost race to tagger")
-        return real(root, meta)
-
-    monkeypatch.setattr(fmt, "try_commit_version", racing)
+    # rival commit lands first: tag pins the snapshot the in-flight
+    # expire computed as expired
+    lost = lose_next_cas(lambda root: tbl.create_tag("pin-old", snapshot_id=first))
     stats = tbl.expire_snapshots(older_than_ms=10**20, retain_last=1)
-    monkeypatch.setattr(fmt, "try_commit_version", real)
 
-    assert state["injected"]
+    assert lost
     # the retry re-read metadata, saw the pin, expired nothing
     assert stats["expired_snapshots"] == 0
     assert stats["deleted_files"] == 0
@@ -320,50 +309,54 @@ def test_clean_collects_orphans_keeps_live(spark, troot):
     assert os.path.exists(orphan_data)
 
 
-def test_lost_cas_attempt_manifest_reclaimed(spark, troot, monkeypatch):
-    """A commit attempt that loses the CAS race must unlink the
-    manifest it wrote before retrying (plus clean() as backstop)."""
+def _leak_append(spark, troot):
     tbl = create_table(troot, SIMPLE_SCHEMA)
     tbl.append(_df(spark, 0, 10))
-    entries = tbl.current_files()
-    # force one CAS loss: first publish attempt collides with a
-    # concurrent commit injected via the build hook
-    real_commit = fmt.commit
-    state = {"raced": False}
+    entry = tbl.current_files()[0]
+    return tbl, lambda: tbl.append_entries([dict(entry)], dedupe_paths=False)
 
-    def racing_commit(root, build, max_retries=1000):
-        def build_with_race(current):
-            out = build(current)
-            if not state["raced"]:
-                state["raced"] = True
-                # concurrent writer lands between read and publish
-                real_commit(
-                    root,
-                    lambda cur: cur
-                    if cur.version != current.version
-                    else __import__("dataclasses").replace(
-                        cur, version=cur.version + 1
-                    ),
-                )
-            return out
-        return real_commit(root, build_with_race, max_retries)
 
-    monkeypatch.setattr(
-        "java_iceberg_table_spark.table.table.fmt.commit", racing_commit
+def _leak_merging_append(spark, troot):
+    tbl = create_table(
+        troot,
+        SIMPLE_SCHEMA,
+        properties={"commit.manifest.min-count-to-merge": "2"},
     )
-    tbl.append_entries(
-        [dict(entries[0], path=entries[0]["path"])], dedupe_paths=False
-    )
-    monkeypatch.undo()
+    tbl.append(_df(spark, 0, 10))
+    tbl.append(_df(spark, 10, 20))
+    entry = tbl.current_files()[0]
+    # a third manifest passes the threshold: the attempt also writes
+    # merged shards
+    return tbl, lambda: tbl.append_entries([dict(entry)], dedupe_paths=False)
+
+
+def _leak_delete_where(spark, troot):
+    tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 100))
+    # one manifest spanning partitions 0 and 100: the retention delete
+    # rewrites it, keeping partition 100
+    tbl.append(_df(spark, 0, 200))
+    return tbl, lambda: tbl.delete_where("ts", "<", 100)
+
+
+@pytest.mark.parametrize(
+    "setup",
+    [_leak_append, _leak_merging_append, _leak_delete_where],
+    ids=["append", "merging_append", "delete_where"],
+)
+def test_lost_cas_attempt_manifest_reclaimed(spark, troot, lose_next_cas, setup):
+    """A commit attempt that loses the CAS race must leave no manifest
+    it wrote behind (fmt.commit unlinks them; clean() is the
+    backstop)."""
+    tbl, commit = setup(spark, troot)
+    # force one CAS loss: a concurrent commit lands between the
+    # attempt's read and its publish
+    lost = lose_next_cas()
+    assert commit() is not None
+    assert lost
     # every manifest on disk must be reachable (no lost-CAS leftovers)
-    md = tbl.metadata
-    live = {m for s in md.snapshots for s_m in [s.manifests] for m in s_m}
-    for s in md.snapshots:
-        am = s.summary.get("added-manifest")
-        if am:
-            live.add(am)
+    live = fmt.manifest_refs(tbl.metadata.snapshots)
     on_disk = {
         os.path.relpath(p, troot)
-        for p in __import__("glob").glob(os.path.join(troot, "manifests", "*.json"))
+        for p in glob.glob(os.path.join(troot, "manifests", "*.json"))
     }
     assert on_disk <= live, on_disk - live

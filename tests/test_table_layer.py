@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import threading
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -294,6 +295,49 @@ def test_compaction_preserves_content(spark, troot):
     # GC after expiry removes the small files
     tbl.expire_snapshots(older_than_ms=10**20, retain_last=1)
     assert tbl.scan(spark).orderBy("k").collect() == before
+
+
+@pytest.mark.parametrize("verb", ["compact", "zorder"])
+def test_rewrite_replans_when_append_lands_mid_commit(
+    spark, troot, lose_next_cas, verb
+):
+    """A bookkeeper append landing between a rewrite's planning and its
+    commit makes the rewrite re-plan against the new head: the counts
+    it returns are those of the snapshot that committed, and every row,
+    the racing append's included, is still scanned."""
+    tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 1000))
+    for i in range(3):
+        tbl.append(
+            spark.range(50).select(
+                (F.col("id") + i * 50).alias("k"), F.lit(f"b{i}").alias("v"),
+                (F.col("id") % 900).alias("ts"),
+            )
+        )
+    n_rows = tbl.scan(spark).count()
+    Writer(tbl, writer_id=0, seed=7).run_iteration(
+        n_files=1, rows_per_file=10, timeperiod_us=0
+    )
+    lost = lose_next_cas(lambda root: Bookkeeper(tbl).run_once())
+    if verb == "compact":
+        stats = tbl.compact_data_files(spark, target_file_bytes=10 * 1024 * 1024)
+        counted = ("compacted-files", "new-files")
+    else:
+        stats = tbl.rewrite_clustered(spark, ["k", "ts"], n_files=2)
+        counted = ("rewritten-files", "new-files")
+    assert lost
+    head = tbl.metadata.current_snapshot()
+    raced = tbl.snapshot_by_id(head.parent_id)
+    assert head.operation == "replace" and raced.operation == "append"
+    assert [stats["rewritten"], stats["new_files"]] == [
+        head.summary[k] for k in counted
+    ]
+    assert stats["rewritten"] == len(tbl.files_of(raced))
+    assert len(tbl.current_files()) == stats["new_files"]
+    before = Counter(
+        map(tuple, tbl.scan(spark, snapshot_id=raced.snapshot_id).collect())
+    )
+    assert sum(before.values()) == n_rows + 10
+    assert Counter(map(tuple, tbl.scan(spark).collect())) == before
 
 
 def test_manifest_merge_shards_bounded(spark, troot):
