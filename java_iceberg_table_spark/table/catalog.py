@@ -188,9 +188,9 @@ def _render_partition_ddl(t) -> str:
 def _introspect_totals(spark, tbl, snap) -> tuple[int, int, int]:
     """(files, rows, bytes) of one snapshot for DESCRIBE EXTENDED.
     Past the distributed-plan threshold the totals come from a
-    distributed JSON manifest scan (the same machinery plan_files and
-    the a3f files table use) — at 100 TB with millions of files a
-    driver loop over every entry is the wrong side of the
+    distributed JSON manifest scan (Table._manifest_entries_df, the
+    files inspection table's read) — at 100 TB with millions of files
+    a driver loop over every entry is the wrong side of the
     metadata-scale contract; below it the driver loop is cheaper than
     a Spark job."""
     from pyspark.sql import functions as F

@@ -277,7 +277,7 @@ def retry_commit(
     load: Callable[[], Any],
     build: Callable[[Any], Any],
     publish: Callable[[Any], None],
-    max_retries: int = 1000,
+    max_attempts: Callable[[Any], int] = lambda head: 1000,
     on_lost: Callable[[Any, Any], None] | None = None,
 ) -> Any:
     """The optimistic-retry loop of every versioned log.
@@ -287,9 +287,11 @@ def retry_commit(
     returns the head), and CAS-publishes it (``publish(new)`` raises
     CommitConflict when a rival won the version). A loser hands its
     attempt to ``on_lost(head, new)``, backs off, re-reads and
-    rebuilds. Mirrors the reference's retry budget semantics
-    (Writer.java:116) with a bounded default."""
-    for attempt in range(max_retries):
+    rebuilds; once ``max_attempts(head)`` attempts are lost the
+    CommitConflict propagates. Mirrors the reference's retry budget
+    semantics (Writer.java:116) with a bounded default."""
+    attempt = 0
+    while True:
         current = load()
         new = build(current)
         if new is None:
@@ -301,10 +303,10 @@ def retry_commit(
         except CommitConflict:
             if on_lost is not None:
                 on_lost(current, new)
-            if attempt == max_retries - 1:
+            attempt += 1
+            if attempt >= max_attempts(current):
                 raise
-            time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
-    raise CommitConflict("retries exhausted")
+            time.sleep(min(0.001 * (2 ** min(attempt - 1, 6)), 0.1))
 
 
 def current_version(root: str) -> int:
@@ -348,8 +350,10 @@ def _unlink_lost_manifests(root: str, base: TableMetadata, lost: TableMetadata) 
             pass
 
 
-def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetadata:
-    """Table commit: ``retry_commit`` over the table's metadata log.
+def commit(root: str, build: "callable") -> TableMetadata:
+    """Table commit: ``retry_commit`` over the table's metadata log,
+    with the attempt budget of the head's ``commit.retry.num-retries``
+    property (default 1000).
 
     ``build(current: TableMetadata) -> TableMetadata | None`` must
     return the next metadata, rebased on the freshly-read current
@@ -363,7 +367,7 @@ def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetada
         lambda: load_metadata(root),
         build,
         lambda new: try_commit_version(root, new),
-        max_retries,
+        lambda head: int(head.properties.get("commit.retry.num-retries", "1000")),
         lambda base, lost: _unlink_lost_manifests(root, base, lost),
     )
 

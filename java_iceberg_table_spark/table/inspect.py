@@ -12,11 +12,14 @@ so these are first-class here.
 Scale design: the file-level table is produced by reading the
 snapshot's manifest JSONs with ``spark.read.json`` under an explicit
 schema — manifest parsing is distributed across executors, never a
-driver loop, so a table with thousands of manifests plans like any
-other JSON scan (and the partitions table is a plain Spark aggregate
-over it, metadata-only, no data file opened). Snapshot/ref/history
-tables are O(metadata-log) and built driver-side — the log is small
-by construction (snapshot expiry caps it).
+driver loop (and the partitions table is a plain Spark aggregate
+over it, metadata-only, no data file opened). The GC sweeps and the
+catalog's DESCRIBE / SHOW PARTITIONS totals read manifests through
+the same schema; scan planning does not (Table.plan_files prunes
+``format.read_manifest`` entries, on executors past its threshold).
+Snapshot/ref/history tables are O(metadata-log) and built
+driver-side — the log is small by construction (snapshot expiry caps
+it).
 """
 
 from __future__ import annotations
@@ -37,6 +40,8 @@ if TYPE_CHECKING:  # pragma: no cover
 # surface identical for every table (Iceberg's readable_metrics makes
 # the same trade). Spark's JSON reader stringifies scalars under a
 # StringType field, so numeric bounds arrive as their literal text.
+# Only the fields its readers select (files_df, the GC sweeps and the
+# catalog totals) are declared.
 _BOUNDS = T.StructType(
     [
         T.StructField("min", T.StringType()),
@@ -62,37 +67,6 @@ MANIFEST_SCHEMA = T.StructType(
                             "partition_fields", T.ArrayType(T.LongType())
                         ),
                         T.StructField("columns", T.MapType(T.StringType(), _BOUNDS)),
-                        T.StructField("seq", T.LongType()),
-                        T.StructField("spec_id", T.LongType()),
-                        T.StructField(
-                            "bloom",
-                            T.StructType(
-                                [
-                                    T.StructField("column", T.StringType()),
-                                    T.StructField("bits", T.LongType()),
-                                    T.StructField("k", T.LongType()),
-                                    T.StructField("words", T.ArrayType(T.LongType())),
-                                ]
-                            ),
-                        ),
-                        T.StructField(
-                            "token_bloom",
-                            T.StructType(
-                                [
-                                    T.StructField("column", T.StringType()),
-                                    T.StructField("bits", T.LongType()),
-                                    T.StructField("k", T.LongType()),
-                                    T.StructField("words", T.ArrayType(T.LongType())),
-                                ]
-                            ),
-                        ),
-                        # row-lineage bookkeeping (Iceberg v3): omitting
-                        # these from the distributed read made every
-                        # _row_id/_last_updated_seq silently NULL exactly
-                        # once manifests crossed the distributed-planning
-                        # threshold
-                        T.StructField("first_row_id", T.LongType()),
-                        T.StructField("row_ids_inline", T.BooleanType()),
                     ]
                 )
             ),

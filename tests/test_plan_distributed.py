@@ -1,5 +1,5 @@
 """Distributed scan planning + GC reachability (the 100x-file-count
-scale path): the Spark manifest-scan planner must prune identically to
+scale path): the executor planner must return the same entries as
 the driver-side Python loop, and the distributed expire/clean sweep
 must delete exactly the unreachable files.
 
@@ -9,6 +9,7 @@ metadata-only — no parquet data needs to exist to verify parity).
 
 from __future__ import annotations
 
+import datetime
 import os
 import tempfile
 
@@ -22,6 +23,15 @@ SCHEMA = StructType(
     [StructField("tp", LongType(), False), StructField("v", LongType(), True)]
 )
 WIDTH = 1000
+
+
+def _assert_parity(tbl, spark, filters) -> list[dict]:
+    """Both planners return the same entry dicts (values and types);
+    returns the driver loop's."""
+    py = tbl.plan_files(filters)
+    dist = tbl.plan_files(filters, spark=spark, distributed_threshold_bytes=0)
+    assert sorted(py, key=lambda e: e["path"]) == sorted(dist, key=lambda e: e["path"])
+    return py
 
 
 def _mk_entries(n: int, start: int = 0) -> list[dict]:
@@ -74,22 +84,7 @@ FILTER_CASES = [
 
 @pytest.mark.parametrize("filters", FILTER_CASES)
 def test_distributed_plan_parity(big_table, spark, filters):
-    py = big_table.plan_files(filters)
-    dist = big_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
-    assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
-    # entry payload survives the JSON round trip with native types
-    if dist:
-        e = sorted(dist, key=lambda e: e["path"])[0]
-        p = next(x for x in py if x["path"] == e["path"])
-        assert (e["rows"], e["bytes"], e["partition"]) == (
-            p["rows"],
-            p["bytes"],
-            p["partition"],
-        )
-        assert e["columns"]["v"]["min"] == p["columns"]["v"]["min"]
-        assert isinstance(e["columns"]["v"]["min"], int)
+    _assert_parity(big_table, spark, filters)
 
 
 def test_distributed_plan_used_above_threshold(big_table, spark, monkeypatch):
@@ -205,11 +200,11 @@ def test_distributed_clean_parity(spark):
 
 
 def test_distributed_plan_carries_lineage_and_token_bloom(spark):
-    """Round-8 regression (ADVICE r7): the distributed planner's entry
-    reconstruction must carry first_row_id / row_ids_inline /
-    token_bloom — scan_with_lineage routes through it once manifests
-    cross the size threshold, and dropping the fields made every
-    _row_id silently NULL exactly at the scale lineage targets."""
+    """The distributed planner's entries carry first_row_id /
+    row_ids_inline / token_bloom — scan_with_lineage routes through it
+    once manifests cross the size threshold, and dropping the fields
+    made every _row_id silently NULL exactly at the scale lineage
+    targets."""
     import shutil
 
     root = tempfile.mkdtemp(prefix="dist_lineage_") + "/t"
@@ -228,21 +223,8 @@ def test_distributed_plan_carries_lineage_and_token_bloom(spark):
                     "words": [3, 0] + [0] * 14,
                 }
         tbl.append_entries(entries)
-        py = {e["path"]: e for e in tbl.plan_files()}
-        dist = {
-            e["path"]: e
-            for e in tbl.plan_files(spark=spark, distributed_threshold_bytes=0)
-        }
-        assert sorted(py) == sorted(dist)
-        for path, p in py.items():
-            d = dist[path]
-            assert d.get("first_row_id") == p.get("first_row_id")
-            assert bool(d.get("row_ids_inline")) == bool(p.get("row_ids_inline"))
-            tb_p, tb_d = p.get("token_bloom"), d.get("token_bloom")
-            assert (tb_d is None) == (tb_p is None)
-            if tb_p is not None:
-                assert tb_d["bits"] == tb_p["bits"]
-                assert list(tb_d["words"]) == list(tb_p["words"])
+        py = _assert_parity(tbl, spark, ())
+        assert sum("token_bloom" in e for e in py) == 5
     finally:
         shutil.rmtree(os.path.dirname(root), ignore_errors=True)
 
@@ -316,16 +298,7 @@ COMPOSITE_FILTER_CASES = [
 def test_distributed_composite_plan_parity(
     big_composite_table, spark, filters
 ):
-    py = big_composite_table.plan_files(filters)
-    dist = big_composite_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
-    assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
-    if dist:
-        e = sorted(dist, key=lambda x: x["path"])[0]
-        p = next(x for x in py if x["path"] == e["path"])
-        assert e["partition_fields"] == p["partition_fields"]
-        assert all(isinstance(v, int) for v in e["partition_fields"])
+    _assert_parity(big_composite_table, spark, filters)
 
 
 def test_distributed_composite_pruned_fractions(big_composite_table, spark):
@@ -365,26 +338,28 @@ SET_LEAF_CASES = [
 @pytest.mark.parametrize("filters", SET_LEAF_CASES)
 def test_distributed_plan_parity_in_leaf(big_table, spark, filters):
     """The round-14 IN leaf decomposes to per-value equality on BOTH
-    planning paths — the distributed expression must prune exactly
-    like the driver loop."""
-    py = big_table.plan_files(filters)
-    dist = big_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
-    assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
+    planning paths — the distributed planner must prune exactly like
+    the driver loop."""
+    _assert_parity(big_table, spark, filters)
+
+
+DAY0 = datetime.date(2024, 1, 1)
 
 
 @pytest.fixture(scope="module")
 def str_table():
-    """2_000 entries with STRING stats on s (30 distinct prefixes) —
-    the prefix-LIKE pruning fixture."""
+    """2_000 entries with STRING stats on s (30 distinct prefixes; odd
+    files' upper bound sits at the 16-char truncation length), DATE
+    stats on d (40 days) and numeric-looking STRING stats on n."""
     root = tempfile.mkdtemp(prefix="dist_plan_s_") + "/t"
-    from pyspark.sql.types import StringType
+    from pyspark.sql.types import DateType, StringType
 
     schema = StructType(
         [
             StructField("tp", LongType(), False),
             StructField("s", StringType(), True),
+            StructField("d", DateType(), True),
+            StructField("n", StringType(), True),
         ]
     )
     tbl = create_table(root, schema, partition=truncate("tp", WIDTH))
@@ -392,6 +367,7 @@ def str_table():
     for i in range(2000):
         bucket = (i % 50) * WIDTH
         pfx = f"p{i % 30:02d}"
+        day = (DAY0 + datetime.timedelta(days=i % 40)).isoformat()
         entries.append(
             {
                 "path": f"data/s{i:06d}.parquet",
@@ -402,7 +378,13 @@ def str_table():
                     "tp": {
                         "min": bucket, "max": bucket + WIDTH - 1, "nulls": 0
                     },
-                    "s": {"min": pfx + "_a", "max": pfx + "_z", "nulls": 0},
+                    "s": {
+                        "min": pfx + "_a",
+                        "max": pfx + "_" + "z" * (12 if i // 30 % 2 else 1),
+                        "nulls": 0,
+                    },
+                    "d": {"min": day, "max": day, "nulls": 0},
+                    "n": {"min": f"{i % 100:05d}", "max": f"{i % 100:05d}", "nulls": 0},
                 },
             }
         )
@@ -420,19 +402,23 @@ LIKE_CASES = [
     [("s", "like_prefix", "p")],         # keeps everything
     [("tp", "<", 5 * WIDTH), ("s", "like_prefix", "p11")],
     [("s", "in", ("p03_m", "zzz"))],     # string IN
+    [("d", "=", DAY0 + datetime.timedelta(days=4))],  # DATE value
+    [("d", "<", DAY0 + datetime.timedelta(days=2))],
+    [("n", "=", "00007")],               # numeric-looking strings
+    [("n", "<", "00003")],
+    [("s", "=", "p07_" + "z" * 12)],     # bound at the truncation length
+    [("s", ">", "p07_" + "z" * 14)],
 ]
+
+# survivors on the driver loop, for the cases whose count pins pruning
+LIKE_KEPT = {0: 67, 6: 50, 7: 150, 8: 20, 9: 60, 10: 33}
 
 
 @pytest.mark.parametrize("filters", LIKE_CASES)
 def test_distributed_plan_parity_like_prefix(str_table, spark, filters):
-    py = str_table.plan_files(filters)
-    dist = str_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
-    assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
-    # the selective prefix really prunes (not everything survives)
-    if filters == [("s", "like_prefix", "p07")]:
-        assert 0 < len(py) <= 2000 // 30 + 1
+    py = _assert_parity(str_table, spark, filters)
+    kept = LIKE_KEPT.get(LIKE_CASES.index(filters))
+    assert kept is None or len(py) == kept
 
 
 def test_dnf_union_planning_goes_distributed(big_table, spark, monkeypatch):

@@ -221,6 +221,17 @@ def test_commit_conflict_surfaces_after_retries(troot):
     assert load_metadata(troot).version == 3
 
 
+def test_retry_budget_bounds_every_commit(troot, lose_next_cas):
+    """commit.retry.num-retries budgets every table commit, not only
+    appends: with one attempt, one lost CAS surfaces."""
+    tbl = create_table(troot, SIMPLE_SCHEMA, properties={"commit.retry.num-retries": "1"})
+    lost = lose_next_cas()
+    with pytest.raises(CommitConflict):
+        tbl.set_properties({"k": "v"})
+    assert lost == [troot]
+    assert "k" not in tbl.metadata.properties
+
+
 def test_snapshot_isolation_reader_never_sees_partial(spark, troot):
     tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 100))
     df = spark.range(100).select(
