@@ -1027,16 +1027,20 @@ FROM orders
 def a3q_engine_manifest_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opportunistic manifest compaction under sustained ingest (the
     reference's commit.manifest.min-count-to-merge, Writer.java:120):
-    every commit that pushes the live-manifest count past the property
-    threshold merges them into partition-sorted shards IN THE SAME
-    COMMIT — no separate maintenance job, no extra snapshot. Twelve
-    small appends with threshold 4 must therefore never accumulate
-    more than threshold+1 manifests (manifests_merged grades that the
-    count dropped at least once and stayed bounded), while the
-    snapshot history stays strictly linear (history_linear: one
-    snapshot per append, parent-chained) and the final scan equals the
-    raw fixture. At 100 TB ingest rates this is what keeps planning
-    cost O(live files), not O(commits ever made)."""
+    every commit that pushes the count of SMALL live manifests (fewer
+    than commit.manifest.max-entries entries) past the property
+    threshold merges those into partition-sorted shards IN THE SAME
+    COMMIT — no separate maintenance job, no extra snapshot. Full
+    shards are carried by reference and never re-read, so a merge's
+    cost is bounded by the threshold, not by the table. Here every
+    manifest is small, so twelve appends with threshold 4 must never
+    accumulate more than threshold+1 manifests (manifests_merged
+    grades that the count dropped at least once and stayed bounded),
+    while the snapshot history stays strictly linear (history_linear:
+    one snapshot per append, parent-chained) and the final scan equals
+    the raw fixture. This keeps the live-manifest count, and so
+    planning's manifest reads, O(live files / max-entries), not
+    O(commits ever made)."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     root = tempfile.mkdtemp(prefix="engine_mm_") + "/t"
     try:

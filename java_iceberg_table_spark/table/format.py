@@ -60,6 +60,20 @@ class Snapshot:
     # STRICTLY SMALLER sequence, so a key re-inserted after the
     # delete is not wrongly removed. 0 on pre-MOR metadata.
     sequence: int = 0
+    # entry count of each data manifest, parallel to ``manifests`` (a
+    # minimal Iceberg manifest list). Written by append_entries; a
+    # merge hint only — see manifest_counts().
+    manifest_entries: list[int | None] = field(default_factory=list)
+
+    def manifest_counts(self) -> list[int | None]:
+        """Entry count of each of ``manifests``, None where unknown:
+        every count is unknown when the list is missing or its length
+        differs (legacy metadata, and the verbs that record no
+        counts). Only append_entries' merge reads it; liveness,
+        pruning, GC and dedupe never do."""
+        if len(self.manifest_entries) == len(self.manifests):
+            return list(self.manifest_entries)
+        return [None] * len(self.manifests)
 
     def to_json(self) -> dict:
         return {
@@ -72,6 +86,7 @@ class Snapshot:
             "schema_id": self.schema_id,
             "delete_manifests": self.delete_manifests,
             "sequence": self.sequence,
+            "manifest_entries": self.manifest_entries,
         }
 
     @staticmethod
@@ -86,6 +101,7 @@ class Snapshot:
             d.get("schema_id"),
             list(d.get("delete_manifests", [])),
             int(d.get("sequence", 0)),
+            list(d.get("manifest_entries", [])),
         )
 
 

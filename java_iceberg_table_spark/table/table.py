@@ -8,9 +8,13 @@ Scale design:
   min/max file skipping happen BEFORE any executor starts — the
   equivalent of Iceberg's manifest filtering.
 - appends write one new manifest; existing manifests are never
-  rewritten (fast append, Writer.java:139-154). Manifest compaction
-  merges small manifests past a threshold
-  (commit.manifest.min-count-to-merge, Writer.java:120).
+  rewritten (fast append, Writer.java:139-154). The same commit
+  merges the small manifests once more than
+  commit.manifest.min-count-to-merge of them are listed
+  (Writer.java:120): a manifest holding commit.manifest.max-entries
+  entries or more is full and is carried by reference, never read,
+  so the merge stays bounded however large the table grows. Each
+  snapshot records its manifests' entry counts for this.
 - the bookkeeper's dedupe-by-path commit reads only the manifests its
   Table instance has not seen: each live manifest's path set is
   cached, and a commit seeds the cache with what it wrote.
@@ -42,6 +46,8 @@ DEFAULT_PROPERTIES = {
     # reference table properties (Writer.java:114-124), renamed only
     # where the reference had a typo
     "commit.retry.num-retries": "1000",
+    # counts SMALL manifests: those below commit.manifest.max-entries
+    # (default 5000); full ones never trigger or join a merge
     "commit.manifest.min-count-to-merge": "8",
     "history.expire.min-snapshots-to-keep": "1",
 }
@@ -1061,8 +1067,12 @@ class Table:
     ) -> Snapshot | None:
         """Fast-append pre-written files (the bookkeeper path, R12):
         one new manifest, no rewrite of existing ones; optimistic-retry
-        commit. Opportunistic manifest merge past the property
-        threshold.
+        commit. Once more than ``commit.manifest.min-count-to-merge``
+        listed manifests are small (fewer than
+        ``commit.manifest.max-entries`` entries), the commit merges
+        just those into shards of at most max-entries; full manifests
+        are carried unread. A merging commit's summary records
+        ``merged-manifests`` and ``merged-entries``.
 
         ``extra_summary`` keys land in the snapshot summary of the SAME
         commit — callers that need commit-atomic markers (the streaming
@@ -1128,36 +1138,52 @@ class Table:
             manifest_rel = fmt.write_manifest(self.root, use)
             if dedupe_paths:
                 written[manifest_rel] = frozenset(e["path"] for e in use)
-            manifests = (list(parent.manifests) if parent else []) + [manifest_rel]
+            listed = list(zip(parent.manifests, parent.manifest_counts())) if parent else []
+            listed.append((manifest_rel, len(use)))
             merge_min = int(
                 current.properties.get("commit.manifest.min-count-to-merge", "8")
             )
-            if len(manifests) > merge_min:
-                # Merge into partition-range SHARDS, not one blob: each
-                # merged manifest holds <= max-entries, sorted by
-                # partition, so (a) no manifest grows unboundedly at
-                # scale and (b) partition-pruned planning can skip
-                # whole manifest shards by their key range.
-                max_entries = int(
-                    current.properties.get("commit.manifest.max-entries", "5000")
-                )
+            max_entries = int(
+                current.properties.get("commit.manifest.max-entries", "5000")
+            )
+
+            def full(n: int | None) -> bool:
+                return n is not None and n >= max_entries
+
+            small = [m for m, n in listed if not full(n)]
+            merge_summary = {}
+            if len(small) > merge_min:
+                # Bounded merge (Iceberg's merge manager): full
+                # manifests are carried by reference and never read;
+                # the small ones (unknown counts included) are read,
+                # sorted by partition and rewritten as shards of
+                # <= max-entries. Once the parent's counts are known,
+                # a merge reads fewer than (min-count + 1) x
+                # max-entries entries at any table size. Planning
+                # still reads every listed manifest: the sort only
+                # keeps a shard's partitions close together.
                 merged: list[dict] = []
-                for m in manifests:
+                for m in small:
                     merged.extend(fmt.read_manifest(self.root, m))
                 merged.sort(key=lambda e: (e.get("partition") is None, e.get("partition"), e["path"]))
-                manifests = []
+                merge_summary = {
+                    "merged-manifests": len(small),
+                    "merged-entries": len(merged),
+                }
+                listed = [(m, n) for m, n in listed if full(n)]
                 for i in range(0, len(merged), max_entries):
                     shard = merged[i : i + max_entries]
-                    manifests.append(fmt.write_manifest(self.root, shard))
+                    listed.append((fmt.write_manifest(self.root, shard), len(shard)))
                     if dedupe_paths:
-                        written[manifests[-1]] = frozenset(e["path"] for e in shard)
+                        written[listed[-1][0]] = frozenset(e["path"] for e in shard)
             snap = Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
                 parent_id=parent.snapshot_id if parent else None,
                 timestamp_ms=fmt.now_ms(),
                 schema_id=current.current_schema_id,
                 operation="append",
-                manifests=manifests,
+                manifests=[m for m, _ in listed],
+                manifest_entries=[n for _, n in listed],
                 sequence=seq,
                 delete_manifests=list(parent.delete_manifests) if parent else [],
                 summary={
@@ -1168,6 +1194,7 @@ class Table:
                     # expiry), and expire_snapshots treats it as live
                     # while this snapshot is retained
                     "added-manifest": manifest_rel,
+                    **merge_summary,
                     **(extra_summary or {}),
                 },
             )

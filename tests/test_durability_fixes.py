@@ -172,6 +172,125 @@ def test_dedupe_reads_manifests_another_instance_wrote(troot, monkeypatch):
     )
 
 
+def _entries(lo: int, hi: int) -> list[dict]:
+    return [
+        {"path": f"data/f{i}.parquet", "rows": 1, "bytes": 1, "partition": None,
+         "columns": {}}
+        for i in range(lo, hi)
+    ]
+
+
+def _merge_table(troot, min_count: int, max_entries: int):
+    return create_table(
+        troot,
+        SIMPLE_SCHEMA,
+        properties={
+            "commit.manifest.min-count-to-merge": str(min_count),
+            "commit.manifest.max-entries": str(max_entries),
+        },
+    )
+
+
+def test_bounded_merge_never_reads_a_full_shard(troot, monkeypatch):
+    """Full shards (>= max-entries) are carried by reference: a merge
+    reads only the small manifests, also through a fresh instance
+    whose counts come from metadata, and a sustained loop never reads
+    more than (min-count + 1) x max-entries entries in one commit
+    while every path lands exactly once."""
+    import random
+
+    min_count, max_entries = 4, 5
+    tbl = _merge_table(troot, min_count, max_entries)
+    for i in range(0, 30, 2):
+        tbl.append_entries(_entries(i, i + 2), dedupe_paths=True)
+    head = tbl.metadata.current_snapshot()
+    full = {
+        m for m in head.manifests
+        if len(fmt.read_manifest(troot, m)) >= max_entries
+    }
+    assert len(full) >= 2
+
+    real_read = fmt.read_manifest
+    reads = _count_manifest_reads(monkeypatch)
+    fresh = load_table(troot)
+    # the head holds no small manifest: the (min-count + 1)th small
+    # one triggers the merge
+    n = 30
+    for _ in range(min_count + 1):
+        snap = fresh.append_entries(_entries(n, n + 2))
+        n += 2
+    assert reads and not full & set(reads)
+    assert "merged-manifests" in snap.summary
+    assert full <= set(snap.manifests)
+
+    rng = random.Random(5)
+    appended, merges = n, 0
+    for _ in range(60):
+        k = rng.randint(1, 7)
+        # a replayed path rides along: dedupe drops it
+        replay = rng.randrange(appended)
+        batch = _entries(appended, appended + k) + _entries(replay, replay + 1)
+        before = len(reads)
+        snap = tbl.append_entries(batch, dedupe_paths=True)
+        appended += k
+        merges += "merged-manifests" in snap.summary
+        read = sum(len(real_read(troot, m)) for m in reads[before:])
+        assert read <= (min_count + 1) * max_entries, read
+    assert merges > 5
+    got = [e["path"] for e in tbl.current_files()]
+    assert sorted(got) == sorted(e["path"] for e in _entries(0, appended))
+
+
+def test_merge_of_uncounted_manifests(troot, monkeypatch):
+    """Metadata written without entry counts (an older writer) still
+    merges correctly: each uncounted manifest is read once, as a small
+    one, and the merged snapshot carries a count for every manifest."""
+    tbl = _merge_table(troot, min_count=4, max_entries=5)
+    for i in range(0, 14, 2):
+        tbl.append_entries(_entries(i, i + 2))
+    v = fmt.current_version(troot)
+    path = os.path.join(troot, "metadata", f"v{v}.json")
+    md = fmt.read_json(path)
+    for s in md["snapshots"]:
+        s.pop("manifest_entries", None)
+    with open(path, "w") as f:
+        json.dump(md, f)
+    legacy = load_table(troot).metadata.current_snapshot().manifests
+    assert len(legacy) <= 4
+
+    reads = _count_manifest_reads(monkeypatch)
+    snap = load_table(troot).append_entries(_entries(14, 16))
+    assert snap.summary["merged-manifests"] == len(legacy) + 1
+    assert sorted(reads) == sorted(legacy + [snap.summary["added-manifest"]])
+    head = load_table(troot).metadata.current_snapshot()
+    assert head.manifest_entries == [
+        len(fmt.read_manifest(troot, m)) for m in head.manifests
+    ]
+    got = [e["path"] for e in load_table(troot).current_files()]
+    assert sorted(got) == sorted(e["path"] for e in _entries(0, 16))
+
+
+def test_merge_summary_counts_merged_entries(troot):
+    """A merging append reports what it merged in its own summary; a
+    non-merging append carries neither key."""
+    tbl = _merge_table(troot, min_count=2, max_entries=5)
+    for lo, hi in ((0, 6), (6, 8), (8, 10)):
+        snap = tbl.append_entries(_entries(lo, hi))
+        assert "merged-manifests" not in snap.summary
+        assert "merged-entries" not in snap.summary
+    parent = snap
+    snap = tbl.append_entries(_entries(10, 11))
+    small = [
+        m for m in parent.manifests + [snap.summary["added-manifest"]]
+        if len(fmt.read_manifest(troot, m)) < 5
+    ]
+    assert snap.summary["merged-manifests"] == len(small) == 3
+    assert snap.summary["merged-entries"] == sum(
+        len(fmt.read_manifest(troot, m)) for m in small
+    ) == 5
+    assert parent.manifests[0] in snap.manifests  # the full one, carried
+
+
 def test_dedupe_cache_shared_by_concurrent_committers(troot):
     """Threads committing overlapping batches through ONE Table share
     its path-set cache: every path still lands exactly once."""
@@ -330,6 +449,15 @@ def _leak_merging_append(spark, troot):
     return tbl, lambda: tbl.append_entries([dict(entry)], dedupe_paths=False)
 
 
+def _leak_bounded_merge(spark, troot):
+    tbl = _merge_table(troot, min_count=2, max_entries=5)
+    for lo, hi in ((0, 6), (6, 8), (8, 10)):
+        tbl.append_entries(_entries(lo, hi))
+    # the attempt's manifest is the third small one: it merges the
+    # small manifests and carries the full one by reference
+    return tbl, lambda: tbl.append_entries(_entries(10, 12))
+
+
 def _leak_delete_where(spark, troot):
     tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 100))
     # one manifest spanning partitions 0 and 100: the retention delete
@@ -340,8 +468,8 @@ def _leak_delete_where(spark, troot):
 
 @pytest.mark.parametrize(
     "setup",
-    [_leak_append, _leak_merging_append, _leak_delete_where],
-    ids=["append", "merging_append", "delete_where"],
+    [_leak_append, _leak_merging_append, _leak_bounded_merge, _leak_delete_where],
+    ids=["append", "merging_append", "bounded_merge", "delete_where"],
 )
 def test_lost_cas_attempt_manifest_reclaimed(spark, troot, lose_next_cas, setup):
     """A commit attempt that loses the CAS race must leave no manifest
@@ -360,3 +488,7 @@ def test_lost_cas_attempt_manifest_reclaimed(spark, troot, lose_next_cas, setup)
         for p in glob.glob(os.path.join(troot, "manifests", "*.json"))
     }
     assert on_disk <= live, on_disk - live
+    # and cleanup unlinked nothing the head still lists
+    head = tbl.metadata.current_snapshot()
+    missing = fmt.manifest_refs([head]) - on_disk
+    assert not missing, missing
